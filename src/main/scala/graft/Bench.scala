@@ -78,6 +78,28 @@ object Bench {
       .flatMap(m => scala.util.Try(m.group(1) -> m.group(2).toDouble).toOption)
       .toMap
 
+  private def escChar(c: Char): String = c match {
+    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+    case '\r' => "\\r"; case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  }
+
+  /** `s` as a JSON string literal. */
+  def jsonEsc(s: String): String = s.map(escChar).mkString("\"", "", "\"")
+
+  /** The compact line's "errors" array: the first 5 errors, each cut to at
+    * most 120 escaped characters (never inside an escape sequence).
+    * Spark exception messages run to hundreds of characters, and
+    * [[fitCompact]] budgets only the per-query map — uncut, 5 errors alone
+    * could push even the zero-query floor line past the driver's tail
+    * capture. */
+  def compactErrors(errors: Seq[String]): String =
+    errors.take(5).map { e =>
+      var n = 0
+      e.iterator.map(escChar).takeWhile { c => n += c.length; n <= 120 }
+        .mkString("\"", "", "\"")
+    }.mkString("[", ",", "]")
+
   /** Render the compact driver line with as many per-query entries as
     * fit under `budget` bytes. The driver's tail capture is 2000 bytes
     * and the full 131-name warm map is ~3.2 KB (the names alone exceed
@@ -327,11 +349,6 @@ object Bench {
       }
       (name, cold, warmF, med, artF, err)
     }
-    def jsonEsc(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     def json(f: ((String, Double, Double, Double, Double, Option[String])) => Double): String =
       results.map(r => s"\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
     val ok = results.filter(_._6.isEmpty)
@@ -341,10 +358,9 @@ object Bench {
     // artifact seconds of the reported warm executions — subtract from
     // `value` to get pure plan cost; per-query split in queries_artifact
     val totalArtifact = ok.map(_._5).sum
-    val errorList = results.collect { case (n, _, _, _, _, Some(e)) => jsonEsc(s"$n: $e") }
-    val errors = errorList.mkString("[", ",", "]")
-    // compact line must stay under the driver's ~2000-byte tail capture
-    val errorsCompact = errorList.take(5).mkString("[", ",", "]")
+    val errorList = results.collect { case (n, _, _, _, _, Some(e)) => s"$n: $e" }
+    val errors = errorList.map(jsonEsc).mkString("[", ",", "]")
+    val errorsCompact = compactErrors(errorList)
     def fmt(d: Double): String = f"$d%.4f"
     val degraded = cpus == "32" &&
       (canary > CANARY_REF * 1.5 || ioProbe > IO_REF * 1.5 || degradedSegments.nonEmpty)

@@ -565,7 +565,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     * bloom-pruned key scan of the new segment per coexisting segment. */
   private def recordDisjointness(seg: String, others: Seq[String]): Unit = {
     if (others.isEmpty) return
-    val newKeys = spark.read.parquet(s"${segPath(seg)}/vectors")
+    val newKeys = segmentTable(seg, "vectors")
       .select(col("user_id"), col("doc_id"))
     val disjoint = others.filter { other =>
       val candidates = readBloom(other) match {
@@ -608,7 +608,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       case None => true
       case Some(tb) =>
         tb.filter(col("tomb_batch") === Long.MaxValue).isEmpty && {
-          val v = spark.read.parquet(s"${segPath(seg)}/vectors")
+          val v = segmentTable(seg, "vectors")
           val rows = v.select(col("user_id"), col("doc_id"),
             (if (v.columns.contains("src_batch")) col("src_batch")
              else lit(Long.MinValue)).as("src_batch"))
@@ -624,6 +624,8 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
 
   /** Build the four tables of one immutable segment from raw rows. */
   private def buildSegment(rows: DataFrame, seg: String): Unit = {
+    // a retry after a failed attempt reuses the name: read the new files
+    forgetSegment(seg)
     // Single-pass build (round 13): the segment's vectors parquet IS the
     // durable copy of this exact frame, so every downstream pass (bloom,
     // centroid sample, postings assignment, terms) reads the WRITTEN
@@ -724,7 +726,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     // all-empty partitioned write leaves no files to infer from — keep
     // the logical frame in that degenerate case (passes produce empty
     // outputs of the right shape either way).
-    if (segRows > 0) vectors = spark.read.parquet(s"${segPath(seg)}/vectors")
+    if (segRows > 0) vectors = segmentTable(seg, "vectors")
 
     // Segment-level blocked bloom over xxhash64(doc_id) (F9; fpr from config
     // mirror rs/config/src/collection.rs:146-149) for the delete
@@ -770,13 +772,13 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       // multi-GB on the driver — Serving's vector store learned this at
       // BASELINE round-2; the flush path uses the same discipline
       val (cIds, cVecs) = graft.operators.ServedIvfIndex.loadCentroidsStreamed(
-        spark.read.parquet(s"${segPath(seg)}/centroids"))
+        segmentTable(seg, "centroids"))
       if (cIds.nonEmpty)
         graft.operators.Hnsw.save(s"${segPath(seg)}/hnsw.bin",
           graft.operators.ServedIvfIndex.buildCentroidGraph(cIds, cVecs))
     }
     val postings = IvfBuilder.buildPostings(
-      vectors, spark.read.parquet(s"${segPath(seg)}/centroids"), params)
+      vectors, segmentTable(seg, "centroids"), params)
     postings
       .repartition(col("centroid_id"))
       .sortWithinPartitions("centroid_id", "point_id")
@@ -1113,7 +1115,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     val deadSegs =
       if (!Files.exists(segRoot)) Nil
       else Fs.listNames(segRoot).filterNot(liveSegs).sorted
-    deadSegs.foreach(s => deleteTree(segRoot.resolve(s)))
+    deadSegs.foreach { s => forgetSegment(s); deleteTree(segRoot.resolve(s)) }
     // WAL truncation: batches every kept version has flushed are dead
     val minFlushed = keptTocs.map(_.lastFlushedBatch).minOption.getOrElse(-1L)
     // fold the delete markers this truncation will remove into the
@@ -1472,7 +1474,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     val t = toc
     if (t.segments.size < 2) return None
     var rows = t.segments.map { s =>
-      val attrs = spark.read.parquet(s"${segPath(s)}/vectors")
+      val attrs = segmentTable(s, "vectors")
       attrs.drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm")
     // allowMissingColumns: segments flushed before an attribute was
     // added lack its column — the rebuild fills nulls (which never
@@ -1505,10 +1507,10 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     val take = math.min(k, t.segments.size)
     if (t.segments.size < 2 || take < 2) return None
     val sized = t.segments.map(s => s -> segmentRowCount(s).getOrElse(
-      spark.read.parquet(s"${segPath(s)}/vectors").count()))
+      segmentTable(s, "vectors").count()))
     val victims = sized.sortBy { case (n, c) => (c, n) }.take(take).map(_._1)
     var rows = victims.map { s =>
-      spark.read.parquet(s"${segPath(s)}/vectors")
+      segmentTable(s, "vectors")
         .drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm")
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     for (tb <- tombstones) rows = Search.dropTombstoned(rows, tb)
@@ -1578,7 +1580,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     val tomb = tombstones.getOrElse(return)
     val t = toc
     val rows = Search.dropTombstoned(
-      spark.read.parquet(s"${segPath(segment)}/vectors")
+      segmentTable(segment, "vectors")
         .drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm"),
       tomb)
     val seg = s"${segment}_v"
@@ -1589,39 +1591,65 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       t.lastFlushedBatch, commitWalPosition(t)))
   }
 
-  /** Hash bucket for partition pruning (stable across writes/reads). */
   /** Memoized "does segment's compiled filter pass ≤ threshold points"
     * decisions for the adaptive filtered-search branch. COLLECTION-scoped,
     * not per-Snapshot: the served path builds a fresh Snapshot per request
     * (GraftService.search), which would make a per-Snapshot memo never hit
     * exactly where it matters. Safe because segments are immutable and
     * segment names are unique within a collection path — an entry can
-    * never go stale. Bounded: cleared wholesale past 256 entries (each key
-    * retains its filter tree and user list, so an unbounded map over
-    * per-request Ids filters would leak). The count job runs OUTSIDE the
-    * map (a concurrent duplicate computes the same immutable answer —
-    * cheaper than serializing unrelated searches behind a CHM bin lock
-    * held across a Spark job). */
-  private val adaptiveFit =
-    new java.util.concurrent.ConcurrentHashMap[(String, graft.operators.DocFilter, Seq[Any], Long), java.lang.Boolean]()
+    * never go stale. */
+  private[core] val adaptiveFits =
+    new Collection.FactMemo[(String, graft.operators.DocFilter, Seq[Any], Long), Boolean]
 
-  private[core] def adaptiveFits(
-      key: (String, graft.operators.DocFilter, Seq[Any], Long))(
-      count: => Boolean): Boolean = {
-    val cached = adaptiveFit.get(key)
-    if (cached != null) return cached.booleanValue()
-    val v = count
-    if (adaptiveFit.size >= 256) adaptiveFit.clear()
-    adaptiveFit.put(key, java.lang.Boolean.valueOf(v))
-    v
-  }
+  /** BM25 (N, avgdl) per (segment set, field, users) for snapshots whose
+    * rows are all live and newest — then a pure function of the segments'
+    * immutable lens tables, shared by every snapshot over them. */
+  private[core] val lensStats = new Collection.FactMemo[(Seq[String], String, List[Any]), (Long, Double)]
 
-  private[core] def userBucket(userId: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  /** Hash bucket for partition pruning (stable across writes/reads). */
+  private[graft] def userBucket(userId: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     if (config.userBuckets > 0) pmod(xxhash64(userId), lit(config.userBuckets.toLong))
     else lit(0L)
 
-  private[core] def segmentTable(seg: String, table: String): DataFrame =
-    spark.read.parquet(s"${segPath(seg)}/$table")
+  /** [[userBucket]] of one id, evaluated on the driver: the same Catalyst
+    * expression the write side partitions by, so the value is the
+    * `user_bucket` a flush wrote for that user — with no Spark job. */
+  private[graft] def userBucketOf(userId: Any): Long =
+    if (config.userBuckets <= 0) 0L
+    else {
+      import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
+      Pmod(new XxHash64(Seq(Literal(userId))), Literal(config.userBuckets.toLong))
+        .eval().asInstanceOf[Long]
+    }
+
+  /** One `spark.read.parquet` relation per (segment, table), reused by
+    * every read. A fresh read infers the schema with a footer-merge Spark
+    * job, and lists the 64 `term_bucket` dirs with a parallel-listing job;
+    * the cached relation carries both, so a read of a segment costs only
+    * its data scan.
+    *
+    * INVARIANT: a committed segment is never rewritten under its name.
+    * Flush, merge, vacuum and tiered merge always mint a new name, so a
+    * cached relation (schema and file listing) can never go stale. The
+    * one writer of a name is the build that mints it — possibly a retry
+    * after a failed first attempt — so [[buildSegment]] drops the name's
+    * entries when it starts, and [[expireVersions]] drops them when it
+    * deletes the segment ([[forgetSegment]]). */
+  private val segmentTables = TrieMap.empty[(String, String), DataFrame]
+  private[graft] def segmentTable(seg: String, table: String): DataFrame =
+    segmentTables.getOrElseUpdate((seg, table),
+      spark.read.parquet(s"${segPath(seg)}/$table"))
+
+  /** Segment names holding cached relations (tests check the lifecycle). */
+  private[graft] def cachedSegments: Set[String] = segmentTables.keySet.map(_._1).toSet
+
+  /** Drop every per-name cache entry of `seg`: the relations and the
+    * memoized facts read from its files. */
+  private def forgetSegment(seg: String): Unit = {
+    segmentTables.keySet.filter(_._1 == seg).foreach(segmentTables.remove)
+    Seq(positionsMemo, lensMemo, vectorColsMemo, disjointMemo, tombInertMemo)
+      .foreach(_.remove(seg))
+  }
 
   /** Does `seg`'s persisted term index carry per-(term, point) POSITION
     * arrays (what Phrase/Near consume)? Memoized per segment name —
@@ -1659,21 +1687,33 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
   /** Vectors table with a partition-pruning predicate for the given users:
     * the filter is on the `user_bucket` PARTITION column, so Catalyst
     * prunes bucket directories before the scan. Bucket values for the
-    * requested users are evaluated with the identical expression on a
-    * 1-row frame (guaranteed same hashing as the write side). */
+    * requested users come from [[userBucketOf]] (the write side's own
+    * expression, evaluated on the driver). */
   private[core] def vectorsFor(seg: String, userIds: Seq[Any]): DataFrame = {
     val df = segmentTable(seg, "vectors")
     if (userIds.isEmpty || config.userBuckets <= 0) df
-    else {
-      val buckets = spark.range(1)
-        .select(explode(array(userIds.map(u => userBucket(lit(u))): _*)).as("b"))
-        .collect().map(_.getLong(0)).distinct.toSeq
-      df.filter(col("user_bucket").isin(buckets: _*))
-    }
+    else df.filter(col("user_bucket").isin(userIds.map(userBucketOf).distinct: _*))
   }
 }
 
 object Collection {
+  /** A collection-scoped memo of facts about immutable segments. The
+    * value is computed OUTSIDE the map (a concurrent duplicate computes
+    * the same answer — cheaper than serializing unrelated reads behind a
+    * lock held across a Spark job). Bounded: cleared wholesale past 256
+    * entries, since keys may retain per-request filters and user lists. */
+  private[core] final class FactMemo[K, V] {
+    private val m = new java.util.concurrent.ConcurrentHashMap[K, Option[V]]()
+    def apply(key: K)(compute: => V): V = {
+      val cached = m.get(key)
+      if (cached != null) return cached.get
+      val v = compute
+      if (m.size >= 256) m.clear()
+      m.put(key, Some(v))
+      v
+    }
+  }
+
   /** Term-hash partition count for segment term indexes (fixed so readers
     * can recompute the bucket of a query term without segment metadata). */
   val termBuckets: Long = 64L
@@ -2611,24 +2651,30 @@ final class Snapshot(
     * every query against it. Recomputing a corpus aggregate per search
     * would dominate the query at scale. */
   private val bm25StatsMemo = TrieMap.empty[(String, List[Any]), (Long, Double)]
-  def bm25FieldStats(field: String, userIds: Seq[Any] = Nil): (Long, Double) =
+  def bm25FieldStats(field: String, userIds: Seq[Any] = Nil): (Long, Double) = {
     // u128 ids are Array[Byte] — wrap for VALUE equality, or the memo
     // never hits and grows one dead entry per query on a held snapshot
-    bm25StatsMemo.getOrElseUpdate((field, userIds.map {
-        case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
-        case x => x
-      }.toList),
+    val users = userIds.map {
+      case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+      case x => x
+    }.toList
+    bm25StatsMemo.getOrElseUpdate((field, users),
       // fast path: stats never need doc ids — under measured-unique,
       // pairwise-disjoint keys every lens row IS a live newest doc, so
       // one pruned aggregate over the (unioned) lens tables alone
-      // replaces the lens⋈vectors join chain
+      // replaces the lens⋈vectors join chain. The figures are then a pure
+      // function of immutable lens tables, so every snapshot over the
+      // same segments shares them (collection-scoped) and plans job-free.
       if (allRowsNewestLive && segments.forall(coll.segmentHasLens)) {
-        Search.bm25Stats(segments.map { seg =>
-          var l = coll.segmentTable(seg, "lens").filter(col("field") === field)
-          if (userIds.nonEmpty) l = l.filter(col("user_id").isin(userIds: _*))
-          l
-        }.reduce(_ unionByName _))
+        coll.lensStats((segments, field, users)) {
+          Search.bm25Stats(segments.map { seg =>
+            var l = coll.segmentTable(seg, "lens").filter(col("field") === field)
+            if (userIds.nonEmpty) l = l.filter(col("user_id").isin(userIds: _*))
+            l
+          }.reduce(_ unionByName _))
+        }
       } else liveFieldLens(field, userIds).map(Search.bm25Stats).getOrElse((0L, 0.0)))
+  }
 
   /** BM25-ranked full-text retrieval over the persisted term index —
     * Okapi BM25 with the Lucene constants (k1 = 1.2, b = 0.75), the

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DocFilter, FilterCompiler, ServedIvfIndex}
@@ -873,29 +874,48 @@ object ServedUserView {
     val segs = t.segments.map { seg =>
       val userRows = dropTombs(coll.vectorsFor(seg, Seq(userId))
         .filter(col("user_id") === uid))
-      val userVecs = userRows
-        .select(col("point_id").cast("long").as("vec_id"),
-          col("doc_id"), col("vector").cast("array<double>").as("embedding"))
-      // postings referencing dropped points are dangling; ServedIvfIndex
-      // .build discards posting entries with no backing vector
-      // Stage-1 selector follows the collection config; with "hnsw" the
-      // flush-time hnsw.bin loads here (seconds) instead of rebuilding
-      // the centroid graph on every serving (re)start.
-      val served = ServedIvfIndex.build(
-        userVecs.select("vec_id", "embedding"),
-        coll.segmentTable(seg, "centroids"),
-        coll.segmentTable(seg, "postings").filter(col("user_id") === uid),
+      // ONE bounded collect of the user's live rows feeds the whole view:
+      // point ids, doc ids, src_batch WAL positions (the newest-wins
+      // aggregation mirrors need them; MinValue for segments flushed
+      // before the column landed), the vector store, and the numeric
+      // (Range leaves) and string-cast schema attributes. Point-id order
+      // is the serving index's point-store order.
+      val cols = userRows.columns.toSet
+      val presentNums = numFieldNames.filter(cols)
+      val presentAttrs = schemaFieldNames.filter(cols)
+      val rows = userRows.select((Seq(col("point_id").cast("long"), col("doc_id"),
+          (if (cols("src_batch")) coalesce(col("src_batch"), lit(Long.MinValue))
+           else lit(Long.MinValue)),
+          col("vector").cast("array<double>")) ++
+        presentNums.map(f => col(f).cast("double")) ++
+        // every schema attribute STRING-CAST on its original column type —
+        // what the served facetCounts mirror buckets on (exact parity with
+        // the distributed cast("string"))
+        presentAttrs.map(f => col(f).cast("string"))): _*)
+        .collect().sortBy(_.getLong(0))
+      val docOf: Map[Long, Any] = rows.map(r => r.getLong(0) -> r.get(1)).toMap
+      val batchOf: Map[Long, Long] = rows.map(r => r.getLong(0) -> r.getLong(2)).toMap
+      // attribute slices: field -> (point -> value), nulls absent (a Range
+      // never matches null; facet buckets skip it)
+      def slice[V](fields: Seq[String], base: Int, get: (Row, Int) => V): Map[String, Map[Long, V]] =
+        fields.zipWithIndex.map { case (f, i) =>
+          f -> rows.iterator.filterNot(_.isNullAt(base + i))
+            .map(r => r.getLong(0) -> get(r, base + i)).toMap
+        }.toMap
+      val numAttrs = slice(presentNums, 4, _.getDouble(_))
+      val attrVals = slice(presentAttrs, 4 + presentNums.size, _.getString(_))
+      // postings referencing dropped points are dangling; assemble
+      // discards posting entries with no backing vector. Stage-1 selector
+      // follows the collection config; with "hnsw" the flush-time
+      // hnsw.bin loads here (seconds) instead of rebuilding the centroid
+      // graph on every serving (re)start.
+      val served = ServedIvfIndex.assemble(
+        ServedIvfIndex.collectCentroids(coll.segmentTable(seg, "centroids")),
+        rows.length, rows.iterator.map(r => (r.getLong(0), r.getSeq[Double](3))),
+        ServedIvfIndex.collectPostings(
+          coll.segmentTable(seg, "postings").filter(col("user_id") === uid)),
         centroidIndex = coll.config.centroidIndexType,
         hnswPath = Some(coll.segmentFile(seg, "hnsw.bin")))
-      // one bounded collect carries doc ids AND src_batch WAL positions
-      // (the newest-wins aggregation mirrors need them; MinValue for
-      // segments flushed before the column landed)
-      val hasBatch = userRows.columns.contains("src_batch")
-      val docRows = userRows.select(col("point_id").cast("long"), col("doc_id"),
-        (if (hasBatch) coalesce(col("src_batch"), lit(Long.MinValue))
-         else lit(Long.MinValue)).as("src_batch")).collect()
-      val docOf: Map[Long, Any] = docRows.map(r => r.getLong(0) -> r.get(1)).toMap
-      val batchOf: Map[Long, Long] = docRows.map(r => r.getLong(0) -> r.getLong(2)).toMap
       // the user's slice of the term index, in memory (MultiTermIndex
       // analogue). Tombstoned points stay out via the docOf remap at
       // query time; sizes are bounded by one user's corpus.
@@ -909,35 +929,6 @@ object ServedUserView {
           .groupBy(_.getString(0))
           .map { case (term, rows) => term -> rows.map(r => r.getLong(1) ->
             Option(r.getSeq[Int](2)).fold(Array.empty[Int])(_.toArray)) }
-      // numeric attribute slice (Range leaves): one bounded collect for
-      // all fields; null values stay absent (a Range never matches null)
-      val presentNums = numFieldNames.filter(userRows.columns.contains)
-      val numAttrs: Map[String, Map[Long, Double]] =
-        if (presentNums.isEmpty) Map.empty
-        else {
-          val rows = userRows.select(
-            (col("point_id").cast("long") +:
-              presentNums.map(f => col(f).cast("double"))): _*).collect()
-          presentNums.zipWithIndex.map { case (f, i) =>
-            f -> rows.iterator.filterNot(_.isNullAt(i + 1))
-              .map(r => r.getLong(0) -> r.getDouble(i + 1)).toMap
-          }.toMap
-        }
-      // every schema attribute STRING-CAST on its original column type —
-      // what the served facetCounts mirror buckets on (exact parity with
-      // the distributed cast("string")); nulls absent
-      val presentAttrs = schemaFieldNames.filter(userRows.columns.contains)
-      val attrVals: Map[String, Map[Long, String]] =
-        if (presentAttrs.isEmpty) Map.empty
-        else {
-          val rows = userRows.select(
-            (col("point_id").cast("long") +:
-              presentAttrs.map(f => col(f).cast("string"))): _*).collect()
-          presentAttrs.zipWithIndex.map { case (f, i) =>
-            f -> rows.iterator.filterNot(_.isNullAt(i + 1))
-              .map(r => r.getLong(0) -> r.getString(i + 1)).toMap
-          }.toMap
-        }
       // the user's slice of the flush-persisted BM25 lens table (doc-
       // length norms), one bounded collect like the rest of the view
       val lensOf: Map[String, Map[Long, Long]] =

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -260,53 +262,80 @@ object ServedIvfIndex {
       idCol: String = "vec_id", vecCol: String = "embedding",
       centroidIndex: String = "exact",
       hnswPath: Option[String] = None): ServedIvfIndex = {
-    require(centroidIndex == "exact" || centroidIndex == "hnsw",
-      s"centroidIndex must be exact|hnsw, got $centroidIndex")
-    val cRows = centroids
+    // The vector store is the big load: stream it via a sorted
+    // toLocalIterator (one partition of boxed rows in memory at a time)
+    // instead of collect(), so peak driver memory is the flat primitive
+    // array itself — 1M x 768 loads in ~6 GB, not ~24 GB.
+    val sortedVecs = embeddings
+      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .orderBy(idCol)
+    val nPoints = sortedVecs.count()
+    require(nPoints <= Int.MaxValue,
+      s"serving shard too large: $nPoints points — shard the index across replicas")
+    assemble(collectCentroids(centroids), nPoints.toInt,
+      sortedVecs.toLocalIterator().asScala.map(r => (r.getLong(0), r.getSeq[Double](1))),
+      collectPostings(postings), centroidIndex, hnswPath)
+  }
+
+  /** A centroid table as `(centroid_id, vector)` pairs — [[assemble]]'s
+    * centroid input. */
+  private[graft] def collectCentroids(centroids: DataFrame): Array[(Int, Array[Double])] =
+    centroids
       .select(col("centroid_id").cast("int"), col("vector").cast("array<double>"))
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
+
+  /** A postings table as `(centroid_id, point_id)` pairs — [[assemble]]'s
+    * posting input. */
+  private[graft] def collectPostings(postings: DataFrame): Array[(Int, Long)] =
+    postings
+      .select(col("centroid_id").cast("int"), col("point_id").cast("long"))
+      .collect()
+      .map(r => (r.getInt(0), r.getLong(1)))
+
+  /** The one assembly of a serving index from driver-side arrays: the
+    * centroid store (sorted by centroid id), the flat vector store, the
+    * per-centroid posting offsets and the optional stage-1 graph. `points`
+    * yields exactly `nPoints` `(point id, vector)` pairs in ascending id
+    * order; postings naming a point not among them (a tombstoned or
+    * other user's point) are dropped. [[build]] feeds it from DataFrames;
+    * the per-user serving view feeds it from its one collect of the
+    * user's rows. */
+  private[graft] def assemble(
+      centroids: Array[(Int, Array[Double])], nPoints: Int,
+      points: Iterator[(Long, scala.collection.Seq[Double])],
+      postings: Array[(Int, Long)],
+      centroidIndex: String = "exact",
+      hnswPath: Option[String] = None): ServedIvfIndex = {
+    require(centroidIndex == "exact" || centroidIndex == "hnsw",
+      s"centroidIndex must be exact|hnsw, got $centroidIndex")
+    val cRows = centroids.sortBy(_._1)
     val dim = if (cRows.isEmpty) 0 else cRows.head._2.length
     val centroidIds = cRows.map(_._1)
     val centFlat = new Array[Double](cRows.length * dim)
     cRows.zipWithIndex.foreach { case ((_, v), i) =>
       System.arraycopy(v, 0, centFlat, i * dim, math.min(dim, v.length))
     }
-    val cIdToIdx = centroidIds.zipWithIndex.toMap
 
-    // The vector store is the big load: stream it into the flat array via
-    // a sorted toLocalIterator (one partition of boxed rows in memory at a
-    // time) instead of collect(), so peak driver memory is the flat
-    // primitive array itself — 1M x 768 loads in ~6 GB, not ~24 GB.
-    val sortedVecs = embeddings
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-      .orderBy(idCol)
-    val nPoints = sortedVecs.count()
     require(nPoints <= Int.MaxValue / math.max(1, dim),
       s"serving shard too large: $nPoints x $dim — shard the index across replicas")
-    val pointIds = new Array[Long](nPoints.toInt)
-    val vecFlat = new Array[Double](nPoints.toInt * dim)
+    val pointIds = new Array[Long](nPoints)
+    val vecFlat = new Array[Double](nPoints * dim)
     var w2 = 0
-    val it = sortedVecs.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
-      pointIds(w2) = r.getLong(0)
-      val v = r.getSeq[Double](1)
+    points.foreach { case (id, v) =>
+      pointIds(w2) = id
       var d2 = 0
       val n2 = math.min(dim, v.length)
       while (d2 < n2) { vecFlat(w2 * dim + d2) = v(d2); d2 += 1 }
       w2 += 1
     }
+    require(w2 == nPoints, s"point store: expected $nPoints points, got $w2")
     val pIdToIdx = new java.util.HashMap[Long, Integer](pointIds.length * 2)
     pointIds.zipWithIndex.foreach { case (id, i) => pIdToIdx.put(id, i) }
 
-    val postRows = postings
-      .select(col("centroid_id").cast("int"), col("point_id").cast("long"))
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .filter { case (_, pid) => pIdToIdx.containsKey(pid) } // drop dangling refs
-    val byCentroid = postRows.groupBy(_._1)
+    // drop dangling refs, then lay each centroid's points out contiguously
+    val byCentroid = postings.filter { case (_, pid) => pIdToIdx.containsKey(pid) }
+      .groupBy(_._1)
     val postOffsets = new Array[Int](centroidIds.length + 1)
     var total = 0
     centroidIds.zipWithIndex.foreach { case (cid, i) =>
@@ -318,11 +347,9 @@ object ServedIvfIndex {
     centroidIds.zipWithIndex.foreach { case (cid, i) =>
       var w = postOffsets(i)
       byCentroid.getOrElse(cid, Array.empty).foreach { case (_, pid) =>
-        val idx = pIdToIdx.get(pid)
-        if (idx != null) { postPoints(w) = idx; w += 1 }
+        postPoints(w) = pIdToIdx.get(pid); w += 1
       }
     }
-    val _ = cIdToIdx // ids are dense post-sort; map kept for clarity
     val hnsw =
       if (centroidIndex == "hnsw" && cRows.nonEmpty) {
         val longIds = centroidIds.map(_.toLong)

@@ -175,6 +175,26 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(floor === render("{}", true))
   }
 
+  test("compactErrors: five 500-character errors keep the compact line in budget") {
+    // Spark exception messages run to hundreds of characters, and quotes
+    // and newlines double when escaped
+    val errs = (1 to 5).map(i => (s"q$i: " + "Job aborted \"stage\"\n" * 40).take(500))
+    val errors = Bench.compactErrors(errs)
+    val entries = "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(errors).map(_.group(1)).toSeq
+    assert(entries.size === 5 && entries.forall(_.length <= 120), errors)
+    // the cut never splits an escape sequence
+    assert(entries.forall(e => e.reverse.takeWhile(_ == '\\').length % 2 == 0), errors)
+    assert(Bench.compactErrors(Seq("short \"one\"")) === "[\"short \\\"one\\\"\"]")
+    // the compact line's fixed fields at realistic widths, around the
+    // cut errors; the zero-query floor included
+    def render(qmap: String, truncated: Boolean): String =
+      s"""{"metric":"total","value":77.81234567890123,"unit":"sec","total_cold":123.45678901234567,"median":80.12345678901234,"artifact_sec":1.2345,"canary":0.1234,"canary_ref":0.35,"io_probe":0.1234,"io_ref":0.5,"degraded":true,"n_ref":131,"degraded_segments":[0,1,2,3,4,5,6,7,8,9,10,11,12,13],"segment_size":10,"n_requeued":40,"n_segment_requeued":40,"cpus":32,"n_queries":131,"n_errors":5,"errors":$errors,"sf":"testdata/sf0.1","queries_full":"/tmp/graft_bench_full.json","queries_truncated":$truncated,"queries":$qmap}"""
+    val qs = (1 to 131).map(i => (f"q$i%03d_some_query_name", 132.0 - i))
+    val line = Bench.fitCompact(qs, 1850, render)
+    assert(line.length <= 1850, s"over budget: ${line.length}")
+    assert(render("{}", true).length <= 1850)
+  }
+
   test("requeue merge: slower or errored requeues never worsen the figures") {
     val samples = Seq(5.16, 15.49, 15.61)
     // slower requeue (stall not over): original stands

@@ -582,4 +582,116 @@ class CollectionSpec extends SparkSuite {
       .select("doc_id").collect().map(_.getLong(0)).toSeq
     assert(got === Seq(2L))
   }
+
+  /** Spark jobs `body` starts on this thread, counted by a listener on a
+    * thread-local tag (like Explain's Meter) once the async bus settles. */
+  private def jobsDuring[A](body: => A): (A, Long) = {
+    val tag = s"jobs-${System.nanoTime()}"
+    val n = new java.util.concurrent.atomic.AtomicLong
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("graft.test.meter") == tag)
+          n.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.test.meter", tag)
+    try {
+      val a = body
+      var last = -1L
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(100)
+        val c = n.get
+        stable = if (c == last) stable + 1 else 0
+        last = c
+      }
+      (a, n.get)
+    } finally {
+      sc.setLocalProperty("graft.test.meter", null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("segment metadata costs no Spark job: plans build job-free, serveUser is bounded") {
+    val base = tmpBase()
+    val coll = Collection.create(spark, base, config)
+    coll.insert(lineRows(200))
+    coll.flush()
+    def plans(): Unit = {
+      val snap = coll.snapshot()
+      snap.search(Seq(2.4, 3.4, 4.4, 5.4),
+        SearchParams(topK = 5, numExploredCentroids = Some(2)), userIds = Seq(0L))
+      snap.rankedSearch("content", "running", 5, userIds = Seq(0L))
+    }
+    plans() // the first read of each segment table infers its schema, once
+    val snap = coll.snapshot()
+    val (_, searchJobs) = jobsDuring(snap.search(Seq(2.4, 3.4, 4.4, 5.4),
+      SearchParams(topK = 5, numExploredCentroids = Some(2)), userIds = Seq(0L)))
+    assert(searchJobs === 0L, "building a Snapshot.search plan ran Spark jobs")
+    val (_, rankedJobs) = jobsDuring(snap.rankedSearch("content", "running", 5,
+      userIds = Seq(0L)))
+    assert(rankedJobs === 0L, "building a Snapshot.rankedSearch plan ran Spark jobs")
+    // one segment, no tail, no tombstones: one collect each of the user's
+    // rows, centroids, postings, terms and lens
+    coll.serveUser(0L)
+    val (view, serveJobs) = jobsDuring(coll.serveUser(0L))
+    assert(serveJobs <= 5L, s"serveUser ran $serveJobs Spark jobs")
+    assert(view.search(Array(2.4, 3.4, 4.4, 5.4), k = 2, nprobe = 10).map(_._1) ===
+      Seq(4L, 3L))
+  }
+
+  test("segment relation cache: expiry drops dead segments; reopen answers identically") {
+    val base = tmpBase()
+    val coll = Collection.create(spark, base, config)
+    coll.insert(lineRows(100))
+    coll.flush()
+    coll.insert((100 until 150).map { i =>
+      (0L, i.toLong, Seq(i.toDouble, i.toDouble, i.toDouble, i.toDouble), s"doc $i running")
+    }.toDF("user_id", "doc_id", "vector", "content"))
+    coll.flush()
+    coll.delete(Seq((0L, 3L)).toDF("user_id", "doc_id"))
+    def answers(c: Collection) = {
+      val snap = c.snapshot()
+      (snap.search(Seq(2.4, 3.4, 4.4, 5.4),
+        SearchParams(topK = 4, numExploredCentroids = Some(10)), userIds = Seq(0L))
+        .select("doc_id", "score").collect().toSeq,
+        snap.rankedSearch("content", "running", 5, userIds = Seq(0L)).collect().toSeq,
+        snap.termSearch(DocFilter.Contains("content", "running"), limit = 10)
+          .select("doc_id").collect().toSeq)
+    }
+    val before = answers(coll)
+    assert(coll.cachedSegments === coll.toc.segments.toSet)
+    assert(coll.merge().isDefined)
+    val merged = answers(coll)
+    assert(merged === before)
+    System.gc() // let dropped snapshots stop pinning their versions
+    coll.expireVersions(keep = 1)
+    val retained = coll.versions.flatMap(v => Toc.readVersion(coll.path, v).get.segments).toSet
+    assert(coll.cachedSegments.subsetOf(retained),
+      s"cache holds expired segments: ${coll.cachedSegments -- retained}")
+    assert(answers(coll) === before)
+    // a fresh instance (cold cache) over the same files answers the same
+    val reopened = Collection.openPersisted(spark, base, config.name)
+    assert(answers(reopened) === before)
+    assert(reopened.serveUser(0L).search(Array(2.4, 3.4, 4.4, 5.4), k = 4, nprobe = 10) ===
+      coll.serveUser(0L).search(Array(2.4, 3.4, 4.4, 5.4), k = 4, nprobe = 10))
+  }
+
+  test("segment relation cache: a rebuild under a failed attempt's name reads the new files") {
+    val base = tmpBase()
+    val coll = Collection.create(spark, base, config)
+    // a failed first build of seg_1 left its vectors behind, and its
+    // read-back cached their listing
+    val seg = s"seg_${coll.toc.version + 1}"
+    lineRows(7).withColumn("point_id", lit(1)).withColumn("user_bucket", lit(0))
+      .write.partitionBy("user_bucket").parquet(s"${coll.path}/segments/$seg/vectors")
+    assert(coll.segmentTable(seg, "vectors").count() === 7L)
+    coll.insert(lineRows(50))
+    assert(coll.flush() === Some(seg))
+    assert(coll.segmentTable(seg, "vectors").count() === 50L)
+    assert(coll.snapshot().search(Seq(40.0, 40.0, 40.0, 40.0),
+      SearchParams(topK = 2, numExploredCentroids = Some(10)))
+      .select("doc_id").collect().map(_.getLong(0)).toSeq === Seq(40L, 39L))
+  }
 }

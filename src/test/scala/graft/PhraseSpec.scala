@@ -433,9 +433,20 @@ class PhraseSpec extends SparkSuite {
     coll.flush()
     // re-insert doc 1 with DIFFERENT text and value: its OLD terms
     // ("scan", "runs") and old chars=15 must count NOWHERE (newest-wins)
+    // the second segment also holds doc 7, whose numeric attribute is
+    // null (absent from Range and facet buckets), and doc 6, deleted and
+    // re-inserted before the flush: both of its rows land in this one
+    // segment and only the re-insert (newer src_batch) is live — its old
+    // text ("scan") and value must count nowhere
     coll.insert(Seq(
-      (0L, 1L, Seq(0.9, 0.1), "merged streams", "red", 25L),
-      (0L, 4L, Seq(0.5, 0.5), "small stream again", "reddish", 17L))
+      (0L, 1L, Seq(0.9, 0.1), "merged streams", "red", Option(25L)),
+      (0L, 4L, Seq(0.5, 0.5), "small stream again", "reddish", Option(17L)),
+      (0L, 6L, Seq(0.2, 0.8), "scan stream six", "green", Option(12L)),
+      (0L, 7L, Seq(0.3, 0.3), "stream seven", "red", Option.empty[Long]))
+      .toDF("user_id", "doc_id", "vector", "content", "tag", "chars"))
+    coll.delete(Seq((0L, 6L)).toDF("user_id", "doc_id"))
+    coll.insert(Seq(
+      (0L, 6L, Seq(0.25, 0.75), "merge six again", "blue", Option(19L)))
       .toDF("user_id", "doc_id", "vector", "content", "tag", "chars"))
     coll.flush()
     coll.delete(Seq((0L, 3L)).toDF("user_id", "doc_id")) // drops doc 3
@@ -463,6 +474,18 @@ class PhraseSpec extends SparkSuite {
         .map { case ((lo, hi), n) => (lo, hi, n) }
       assert(srv === dist, s"facetRanges parity for $f / $buckets")
     }
+    // vector parity: the same collect's vectors and doc ids feed the
+    // serving index (full probe, so both paths are exact)
+    val q = Array(0.3, 0.6)
+    val distVec = snap.search(q.toSeq, graft.operators.SearchParams(topK = 5,
+        numExploredCentroids = Some(Int.MaxValue), centroidDistanceRatio = 1e18),
+        userIds = Seq(0L))
+      .select("doc_id", "score").collect()
+      .map(r => (r.getLong(0), math.round(r.getDouble(1) * 1e6))).toSeq
+    val srvVec = served.search(q, k = 5, nprobe = Int.MaxValue)
+      .map { case (id, d) => (id.asInstanceOf[Long], math.round(d * 1e6)) }
+    assert(srvVec === distVec)
+    assert(srvVec.map(_._1).count(_ == 6L) === 1)
     // the superseded-text filter really matches nothing (newest-wins)
     assert(served.facetRanges(DocFilter.Contains("content", "scan"), "chars",
       Seq((0.0, 100.0))).map(_._2) === Seq(0L))

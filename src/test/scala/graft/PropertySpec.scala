@@ -165,4 +165,37 @@ class PropertySpec extends SparkSuite {
       kernelOk && got === floats.map(_.map(java.lang.Float.floatToRawIntBits).toSeq)
     }, 20)
   }
+
+  test("driver-side user bucket == Spark's userBucket == the flushed user_bucket value") {
+    import graft.core.{Collection, CollectionConfig}
+    val base = java.nio.file.Files.createTempDirectory("graft_bucket").toString
+    val longIds = Gen.listOfN(40, Gen.chooseNum(Long.MinValue, Long.MaxValue))
+    val binIds = Gen.listOfN(40,
+      Gen.listOfN(16, Gen.chooseNum(-128, 127).map(_.toByte)).map(_.toArray))
+    def parity[T](name: String, ids: Gen[List[T]],
+        toDf: Seq[T] => org.apache.spark.sql.DataFrame): Unit = {
+      val coll = Collection.create(spark, base,
+        CollectionConfig(name = name, numFeatures = 2, initialNumCentroids = 2))
+      check(Prop.forAll(ids) { (us: List[T]) =>
+        us.isEmpty || {
+          val viaSpark = toDf(us).select(coll.userBucket(col("user_id")))
+            .collect().map(_.getLong(0))
+          viaSpark.toSeq == us.map(coll.userBucketOf)
+        }
+      }, 10)
+      // the partition value a flush wrote for each user's rows
+      val users = ids.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(7L)).distinct
+      coll.insert(toDf(users).withColumn("doc_id", monotonically_increasing_id())
+        .withColumn("vector", array(lit(1.0), lit(2.0))))
+      coll.flush()
+      val written = coll.segmentTable(coll.toc.segments.head, "vectors")
+        .select("user_id", "user_bucket").distinct().collect()
+      assert(written.length === users.size)
+      written.foreach { r =>
+        assert(r.getInt(1).toLong === coll.userBucketOf(r.get(0)), s"$name user ${r.get(0)}")
+      }
+    }
+    parity[Long]("long_ids", longIds, _.toDF("user_id"))
+    parity[Array[Byte]]("binary_ids", binIds, _.toDF("user_id"))
+  }
 }
