@@ -365,7 +365,7 @@ class GraftService(spark: SparkSession, val basePath: String) {
     * reference's GetSegments size reporting. */
   def getSegmentStats(collectionName: String): Seq[(String, Long)] = {
     val coll = collection(collectionName)
-    coll.toc.segments.map(s => s -> coll.segmentRowCount(s).getOrElse(-1L))
+    coll.toc.segments.map(s => s -> coll.segment(s).rows.getOrElse(-1L))
   }
 
   def mergeSegments(collectionName: String): Option[String] =

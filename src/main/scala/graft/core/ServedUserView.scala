@@ -872,20 +872,20 @@ object ServedUserView {
     val numFieldNames = coll.config.numericFields.map(_.name)
     val schemaFieldNames = coll.config.attributeSchema.map(_.name)
     val segs = t.segments.map { seg =>
+      val record = coll.segment(seg)
       val userRows = dropTombs(coll.vectorsFor(seg, Seq(userId))
         .filter(col("user_id") === uid))
       // ONE bounded collect of the user's live rows feeds the whole view:
       // point ids, doc ids, src_batch WAL positions (the newest-wins
-      // aggregation mirrors need them; MinValue for segments flushed
-      // before the column landed), the vector store, and the numeric
-      // (Range leaves) and string-cast schema attributes. Point-id order
-      // is the serving index's point-store order.
+      // aggregation mirrors need them; MinValue for a row without one),
+      // the vector store, and the numeric (Range leaves) and string-cast
+      // schema attributes. Point-id order is the serving index's
+      // point-store order.
       val cols = userRows.columns.toSet
       val presentNums = numFieldNames.filter(cols)
       val presentAttrs = schemaFieldNames.filter(cols)
       val rows = userRows.select((Seq(col("point_id").cast("long"), col("doc_id"),
-          (if (cols("src_batch")) coalesce(col("src_batch"), lit(Long.MinValue))
-           else lit(Long.MinValue)),
+          coalesce(col("src_batch"), lit(Long.MinValue)),
           col("vector").cast("array<double>")) ++
         presentNums.map(f => col(f).cast("double")) ++
         // every schema attribute STRING-CAST on its original column type —
@@ -910,21 +910,20 @@ object ServedUserView {
       // hnsw.bin loads here (seconds) instead of rebuilding the centroid
       // graph on every serving (re)start.
       val served = ServedIvfIndex.assemble(
-        ServedIvfIndex.collectCentroids(coll.segmentTable(seg, "centroids")),
+        ServedIvfIndex.collectCentroids(record.centroids),
         rows.length, rows.iterator.map(r => (r.getLong(0), r.getSeq[Double](3))),
         ServedIvfIndex.collectPostings(
-          coll.segmentTable(seg, "postings").filter(col("user_id") === uid)),
+          record.postings.filter(col("user_id") === uid)),
         centroidIndex = coll.config.centroidIndexType,
-        hnswPath = Some(coll.segmentFile(seg, "hnsw.bin")))
+        hnswPath = Some(record.file("hnsw.bin")))
       // the user's slice of the term index, in memory (MultiTermIndex
       // analogue). Tombstoned points stay out via the docOf remap at
       // query time; sizes are bounded by one user's corpus.
-      val tseg = coll.segmentTable(seg, "terms").filter(col("user_id") === uid)
-      val hasPositions = tseg.columns.contains("positions")
       val termPostings: Map[String, Array[(Long, Array[Int])]] =
-        tseg.select(col("term"), col("point_id").cast("long"),
-          (if (hasPositions) col("positions")
-           else lit(null).cast("array<int>")).as("positions"))
+        record.terms.filter(col("user_id") === uid)
+          .select(col("term"), col("point_id").cast("long"),
+            (if (record.hasPositions) col("positions")
+             else lit(null).cast("array<int>")).as("positions"))
           .collect()
           .groupBy(_.getString(0))
           .map { case (term, rows) => term -> rows.map(r => r.getLong(1) ->
@@ -932,15 +931,15 @@ object ServedUserView {
       // the user's slice of the flush-persisted BM25 lens table (doc-
       // length norms), one bounded collect like the rest of the view
       val lensOf: Map[String, Map[Long, Long]] =
-        if (!coll.segmentHasLens(seg)) Map.empty
-        else coll.segmentTable(seg, "lens").filter(col("user_id") === uid)
+        if (!record.hasLens) Map.empty
+        else record.lens.filter(col("user_id") === uid)
           .select(col("field"), col("point_id").cast("long"),
             col("dl").cast("long"))
           .collect()
           .groupBy(_.getString(0))
           .map { case (f, rows) =>
             f -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap }
-      SegmentView(seg, served, docOf, termPostings, hasPositions, numAttrs,
+      SegmentView(seg, served, docOf, termPostings, record.hasPositions, numAttrs,
         batchOf, attrVals, lensOf)
     }
     // analyzed text rides out of the same Spark expressions the index side
@@ -978,8 +977,7 @@ object ServedUserView {
           val attrs = presentAttrs.zipWithIndex.flatMap { case (f, j) =>
             Option(r.getString(sbIdx + 1 + j)).map(f -> _)
           }.toMap
-          TailRow(r.get(0), r.getSeq[Double](1).toArray, toks, kws, nums,
-            if (r.isNullAt(sbIdx)) Long.MinValue else r.getLong(sbIdx), attrs)
+          TailRow(r.get(0), r.getSeq[Double](1).toArray, toks, kws, nums, r.getLong(sbIdx), attrs)
         }
     }
     new ServedUserView(segs, tailRows, fieldLang,

@@ -463,9 +463,9 @@ object Search {
     * SQL replay agrees on every comparison.
     *
     * Returns `[user_id, doc_id, score, n_terms_hit]` (how many distinct
-    * query terms matched), unordered/unlimited — [[bm25TopK]] is the
-    * retrieval surface, this the building block (more-like-this excludes
-    * its seed doc between score and limit). */
+    * query terms matched), unordered/unlimited — the building block the
+    * retrieval surfaces order and limit, as [[TextPipeline.bm25TopK]] does
+    * (more-like-this excludes its seed doc between score and limit). */
   def bm25Score(
       termFreqs: DataFrame,
       docLens: DataFrame,
@@ -493,22 +493,6 @@ object Search {
       .agg(round(sum(idf * tfNorm), 4).as("score"),
         count(lit(1)).as("n_terms_hit"))
   }
-
-  /** BM25 top-k: [[bm25Score]] ordered (score desc, doc_id asc), top `k`
-    * — descending: BM25 is a relevance score, not a distance (K4's
-    * ascending contract is for distances; the doc_id tiebreak is shared). */
-  def bm25TopK(
-      termFreqs: DataFrame,
-      docLens: DataFrame,
-      queryTerms: Seq[String],
-      k: Int,
-      nDocs: Long,
-      avgdl: Double,
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame =
-    bm25Score(termFreqs, docLens, queryTerms, nDocs, avgdl, k1, b)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
 
   /** Maximal Marginal Relevance reranking (Carbonell & Goldstein,
     * SIGIR'98) — the standard relevance/diversity tradeoff over a

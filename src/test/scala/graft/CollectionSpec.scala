@@ -662,6 +662,13 @@ class CollectionSpec extends SparkSuite {
     }
     val before = answers(coll)
     assert(coll.cachedSegments === coll.toc.segments.toSet)
+    // every build-time fact is read into the segment's record
+    val Seq(first, second) = coll.toc.segments.map(coll.segment)
+    assert((first.rows, second.rows) === (Some(100L), Some(50L)))
+    assert(first.uniqueKeys && second.uniqueKeys && first.hasLens)
+    assert(second.disjointFrom === Set(coll.toc.segments.head))
+    assert(second.tombInertUpTo.isDefined)
+    val flushed = coll.toc.segments.toSet
     assert(coll.merge().isDefined)
     val merged = answers(coll)
     assert(merged === before)
@@ -670,6 +677,9 @@ class CollectionSpec extends SparkSuite {
     val retained = coll.versions.flatMap(v => Toc.readVersion(coll.path, v).get.segments).toSet
     assert(coll.cachedSegments.subsetOf(retained),
       s"cache holds expired segments: ${coll.cachedSegments -- retained}")
+    // the facts live in the record, so an expired segment keeps none
+    assert((flushed -- retained).nonEmpty)
+    assert((coll.cachedSegments & (flushed -- retained)).isEmpty)
     assert(answers(coll) === before)
     // a fresh instance (cold cache) over the same files answers the same
     val reopened = Collection.openPersisted(spark, base, config.name)
@@ -681,17 +691,88 @@ class CollectionSpec extends SparkSuite {
   test("segment relation cache: a rebuild under a failed attempt's name reads the new files") {
     val base = tmpBase()
     val coll = Collection.create(spark, base, config)
-    // a failed first build of seg_1 left its vectors behind, and its
-    // read-back cached their listing
+    coll.insert(lineRows(10))
+    coll.flush()
+    // a failed first build of the next segment left its vectors and facts
+    // behind, and reads cached them
     val seg = s"seg_${coll.toc.version + 1}"
+    val dir = s"${coll.path}/segments/$seg"
     lineRows(7).withColumn("point_id", lit(1)).withColumn("user_bucket", lit(0))
-      .write.partitionBy("user_bucket").parquet(s"${coll.path}/segments/$seg/vectors")
-    assert(coll.segmentTable(seg, "vectors").count() === 7L)
-    coll.insert(lineRows(50))
+      .write.partitionBy("user_bucket").parquet(s"$dir/vectors")
+    Files.writeString(java.nio.file.Paths.get(dir, "meta.json"),
+      """{"rows": 7, "uniqueKeys": false}""")
+    Files.writeString(java.nio.file.Paths.get(dir, "disjoint.json"), """{"disjointFrom": []}""")
+    val stale = coll.segment(seg)
+    assert(stale.vectors.count() === 7L)
+    assert((stale.rows, stale.uniqueKeys, stale.disjointFrom) === (Some(7L), false, Set.empty))
+    coll.insert(lineRows(60).filter(col("doc_id") >= 10))
     assert(coll.flush() === Some(seg))
-    assert(coll.segmentTable(seg, "vectors").count() === 50L)
+    val rebuilt = coll.segment(seg)
+    assert(rebuilt.vectors.count() === 50L)
+    assert((rebuilt.rows, rebuilt.uniqueKeys, rebuilt.disjointFrom) ===
+      (Some(50L), true, Set(coll.toc.segments.head)))
     assert(coll.snapshot().search(Seq(40.0, 40.0, 40.0, 40.0),
       SearchParams(topK = 2, numExploredCentroids = Some(10)))
       .select("doc_id").collect().map(_.getLong(0)).toSeq === Seq(40L, 39L))
+  }
+
+  private val nearFour = Seq(4.0, 4.0, 4.0, 4.0)
+  // every centroid probed, no ratio prune: exact answers on both paths
+  private def sparkIds(coll: Collection): Seq[Long] =
+    coll.snapshot().search(nearFour, SearchParams(topK = 4, numExploredCentroids = Some(10),
+      centroidDistanceRatio = 1e18), userIds = Seq(0L))
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+  private def servedIds(coll: Collection): Seq[Long] =
+    coll.serveUser(0L).search(nearFour.toArray, k = 4, nprobe = 10).map(_._1.asInstanceOf[Long])
+
+  test("WAL relation cache: a delete after a tombstone read is hidden on both paths") {
+    val base = tmpBase()
+    val coll = Collection.create(spark, base, config)
+    coll.insert(lineRows(50))
+    coll.flush()
+    coll.delete(Seq((0L, 3L)).toDF("user_id", "doc_id"))
+    // both paths read (and cache) the tombstone relation
+    assert(sparkIds(coll) === Seq(4L, 5L, 2L, 6L))
+    assert(servedIds(coll) === Seq(4L, 5L, 2L, 6L))
+    coll.delete(Seq((0L, 4L)).toDF("user_id", "doc_id"))
+    assert(sparkIds(coll) === Seq(5L, 2L, 6L, 1L))
+    assert(servedIds(coll) === Seq(5L, 2L, 6L, 1L))
+  }
+
+  test("WAL relation cache: a streaming epoch retry that overwrites its batch is seen") {
+    val base = tmpBase()
+    val coll = Collection.create(spark, base, config)
+    val b = coll.nextStreamingBase()
+    coll.insertAt(b, lineRows(5))
+    assert(coll.snapshot().liveDocs.get.count() === 5L)
+    coll.insertAt(b, lineRows(8)) // the retried epoch rewrites batch=<b>
+    assert(coll.snapshot().liveDocs.get.count() === 8L)
+    assert(sparkIds(coll) === Seq(4L, 3L, 5L, 2L))
+  }
+
+  test("legacy vectors table without src_batch: reads Long.MinValue, tombstones hide its rows") {
+    val base = tmpBase()
+    val coll = Collection.create(spark, base, config)
+    coll.insert(lineRows(20))
+    val seg = coll.flush().get
+    // surgery: rewrite the segment's vectors WITHOUT src_batch (the
+    // on-disk format before the column existed); segments are immutable
+    // in production — this simulates data written by an older release
+    val vecDir = s"${coll.path}/segments/$seg/vectors"
+    val tmp = Files.createTempDirectory("graft_legacy_vectors").toString
+    spark.read.parquet(vecDir).drop("src_batch")
+      .write.mode("overwrite").partitionBy("user_bucket").parquet(tmp)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(vecDir))
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(tmp), new java.io.File(vecDir))
+    val legacy = Collection.openPersisted(spark, base, config.name)
+    assert(!spark.read.parquet(vecDir).columns.contains("src_batch"))
+    val live = legacy.snapshot().liveDocs.get
+    assert(live.count() === 20L)
+    assert(live.select("src_batch").distinct().collect().map(_.getLong(0)).toSeq ===
+      Seq(Long.MinValue))
+    legacy.delete(Seq((0L, 4L)).toDF("user_id", "doc_id"))
+    assert(legacy.snapshot().liveDocs.get.count() === 19L)
+    assert(sparkIds(legacy) === Seq(3L, 5L, 2L, 6L))
+    assert(servedIds(legacy) === Seq(3L, 5L, 2L, 6L))
   }
 }

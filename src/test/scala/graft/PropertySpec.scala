@@ -188,7 +188,7 @@ class PropertySpec extends SparkSuite {
       coll.insert(toDf(users).withColumn("doc_id", monotonically_increasing_id())
         .withColumn("vector", array(lit(1.0), lit(2.0))))
       coll.flush()
-      val written = coll.segmentTable(coll.toc.segments.head, "vectors")
+      val written = coll.segment(coll.toc.segments.head).vectors
         .select("user_id", "user_bucket").distinct().collect()
       assert(written.length === users.size)
       written.foreach { r =>
