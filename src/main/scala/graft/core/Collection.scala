@@ -1423,20 +1423,32 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
   def merge(): Option[String] = withWriter {
     val t = toc
     if (t.segments.size < 2) return None
-    var rows = t.segments.map { s =>
-      segment(s).vectors.drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm")
+    val seg = s"merged_${t.version + 1}"
+    rewrite(t, t.segments, seg, Seq(seg))
+    Some(seg)
+  }
+
+  /** The one compaction rewrite behind [[merge]], [[mergeSmallest]] and
+    * [[vacuum]]: union the `victims`' live rows (current tombstones
+    * dropped — ids are remapped by rebuilding, J3) into the new segment
+    * `seg`, record its disjointness from the segments that stay and its
+    * tombstone inertness, then commit `segments` as the next TOC's list. */
+  private def rewrite(t: Toc, victims: Seq[String], seg: String,
+      segments: Seq[String]): Unit = {
+    var rows = victims.map { s =>
+      segment(s).vectors
+        .drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm")
     // allowMissingColumns: segments flushed before an attribute was
     // added lack its column — the rebuild fills nulls (which never
     // match a Range), making merge() the schema-evolution upgrade the
     // capability errors point at
     }.reduce(_.unionByName(_, allowMissingColumns = true))
     for (tb <- tombstones) rows = Search.dropTombstoned(rows, tb)
-    val seg = s"merged_${t.version + 1}"
     buildSegment(rows, seg)
+    recordDisjointness(seg, t.segments.filterNot(victims.contains))
     recordTombInert(seg, t)
-    Toc.write(path, Toc(t.version + 1, Seq(seg), t.lastFlushedBatch,
+    Toc.write(path, Toc(t.version + 1, segments, t.lastFlushedBatch,
       commitWalPosition(t)))
-    Some(seg)
   }
 
   /** Size-tiered merge — the 100 TB compaction posture. [[merge]] rewrites
@@ -1457,18 +1469,8 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     if (t.segments.size < 2 || take < 2) return None
     val sized = t.segments.map(s => s -> segment(s).rows.getOrElse(segment(s).vectors.count()))
     val victims = sized.sortBy { case (n, c) => (c, n) }.take(take).map(_._1)
-    var rows = victims.map { s =>
-      segment(s).vectors
-        .drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm")
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
-    for (tb <- tombstones) rows = Search.dropTombstoned(rows, tb)
     val seg = s"tiered_${t.version + 1}"
-    buildSegment(rows, seg)
-    recordDisjointness(seg, t.segments.filterNot(victims.contains))
-    recordTombInert(seg, t)
-    Toc.write(path, Toc(t.version + 1,
-      t.segments.filterNot(victims.contains) :+ seg,
-      t.lastFlushedBatch, commitWalPosition(t)))
+    rewrite(t, victims, seg, t.segments.filterNot(victims.contains) :+ seg)
     Some(seg)
   }
 
@@ -1525,18 +1527,10 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
 
   /** Vacuum one segment: rewrite it without tombstoned docs. */
   def vacuum(segment: String): Unit = withWriter {
-    val tomb = tombstones.getOrElse(return)
+    if (tombstones.isEmpty) return
     val t = toc
-    val rows = Search.dropTombstoned(
-      this.segment(segment).vectors
-        .drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm"),
-      tomb)
     val seg = s"${segment}_v"
-    buildSegment(rows, seg)
-    recordDisjointness(seg, t.segments.filterNot(_ == segment))
-    recordTombInert(seg, t)
-    Toc.write(path, Toc(t.version + 1, t.segments.map(s => if (s == segment) seg else s),
-      t.lastFlushedBatch, commitWalPosition(t)))
+    rewrite(t, Seq(segment), seg, t.segments.map(s => if (s == segment) seg else s))
   }
 
   /** Memoized "does segment's compiled filter pass ≤ threshold points"

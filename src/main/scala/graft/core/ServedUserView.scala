@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DocFilter, FilterCompiler, ServedIvfIndex}
@@ -14,18 +14,21 @@ import graft.operators.{DocFilter, FilterCompiler, ServedIvfIndex}
   * user's slice of every segment (bucket-pruned scans) into driver-memory
   * [[ServedIvfIndex]] structures — plus the user's term postings
   * (the reference's per-user `MultiTermIndex`,
-  * rs/index/src/multi_terms/index.rs:52), the unflushed tail rows with
-  * their analyzed text fields, and tombstones. Single queries — vector,
-  * term, or hybrid (rs/index/src/collection/snapshot.rs:114-147) — are
-  * then answered with zero Spark jobs: per-segment in-memory probes /
-  * posting-set algebra + a brute-force pass over the tail
-  * (read-your-writes, R5), tombstones dropped, merged by the engine's
-  * (score asc, doc_id asc) order. Memory is bounded by one user's data —
-  * the per-shard posture of the reference, not corpus-sized.
+  * rs/index/src/multi_terms/index.rs:52) and tombstones. The user's
+  * unflushed tail is served as one more in-memory segment, appended after
+  * the flushed ones: its postings come from the flush's own term
+  * expressions and its index is one centroid holding every row, so a
+  * probe is an exact brute-force scan (the reference's mutable segment,
+  * rs/index/src/segment/pending_segment.rs; read-your-writes, R5). Single
+  * queries — vector, term, or hybrid
+  * (rs/index/src/collection/snapshot.rs:114-147) — are then answered with
+  * zero Spark jobs: per-segment in-memory probes / posting-set algebra,
+  * tombstones dropped, merged by the engine's (score asc, doc_id asc)
+  * order. Memory is bounded by one user's data — the per-shard posture of
+  * the reference, not corpus-sized.
   */
 final class ServedUserView private[core] (
     segments: Seq[ServedUserView.SegmentView],
-    tailRows: Array[ServedUserView.TailRow],
     fieldLang: Map[String, String],
     keywordFields: Set[String],
     numericFields: Set[String]) {
@@ -37,7 +40,7 @@ final class ServedUserView private[core] (
   private def norm(f: DocFilter): DocFilter =
     DocFilter.normalize(f, keywordFields.contains)
 
-  import ServedUserView.{SegmentView, TailRow}
+  import ServedUserView.{SegmentView, idLess}
 
   /** Served mirror of `Snapshot.requireNumericFields` (round-15 ADVICE):
     * without it the same Range filter gave a loud schema/capability error
@@ -45,8 +48,9 @@ final class ServedUserView private[core] (
     * Each ranged field must be a numeric KIND in the schema, and every
     * segment's loaded slice must carry its column — a segment flushed
     * before the field existed fails NAMING itself with the rebuild as
-    * the fix. (Tail rows without the value simply never match — the
-    * null contract, same as the distributed path.) */
+    * the fix. (The tail view keys every numeric field, so tail rows
+    * without the value simply never match — the null contract, same as
+    * the distributed path.) */
   private def requireNumericFields(nf: DocFilter): Unit = {
     val ranged = DocFilter.rangeFields(nf)
     if (ranged.isEmpty) return
@@ -71,43 +75,33 @@ final class ServedUserView private[core] (
   }
 
   /** Each doc's NEWEST live row (by src_batch WAL position) across
-    * segments + tail — the served mirror of the Snapshot's newest-wins
-    * rule for aggregation surfaces ([[facetRanges]]/[[suggest]]): a doc
-    * counts iff its newest live version matches / carries the term, so
-    * the served answers agree with the attribute values the CDC fetch
-    * reports for the same docs. Built once per view (memory: one entry
-    * per live doc — the same bound as docOf). Ties on equal src_batch
-    * resolve arbitrarily, like the distributed row_number window. */
-  private lazy val newestRows: Map[Any, Either[(SegmentView, Long), TailRow]] = {
-    val m = scala.collection.mutable.HashMap[Any, (Long, Either[(SegmentView, Long), TailRow])]()
+    * segments, the tail view last — the served mirror of the Snapshot's
+    * newest-wins rule for aggregation surfaces ([[facetRanges]]/
+    * [[suggest]]): a doc counts iff its newest live version matches /
+    * carries the term, so the served answers agree with the attribute
+    * values the CDC fetch reports for the same docs. Built once per view
+    * (memory: one entry per live doc — the same bound as docOf). Ties on
+    * equal src_batch resolve arbitrarily, like the distributed
+    * row_number window. */
+  private lazy val newestRows: Map[Any, (SegmentView, Long)] = {
+    val m = scala.collection.mutable.HashMap[Any, (Long, (SegmentView, Long))]()
     for (sv <- segments; (pid, doc) <- sv.docOf) {
       val b = sv.batchOf.getOrElse(pid, Long.MinValue)
       val k = docKey(doc)
-      if (!m.get(k).exists(_._1 >= b)) m(k) = (b, Left((sv, pid)))
-    }
-    for (row <- tailRows) {
-      val k = docKey(row.docId)
-      if (!m.get(k).exists(_._1 >= row.srcBatch))
-        m(k) = (row.srcBatch, Right(row))
+      if (!m.get(k).exists(_._1 >= b)) m(k) = (b, (sv, pid))
     }
     m.view.mapValues(_._2).toMap
   }
 
-  /** Unsigned-lexicographic for BinaryType ids, natural for Long ids —
-    * matches Spark's sort order on the corresponding column types. */
-  private def idLess(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long) => x < y
-    case (x: Array[Byte], y: Array[Byte]) =>
-      java.util.Arrays.compareUnsigned(x, y) < 0
-    case _ => a.toString < b.toString
-  }
+  /** Is (`sv`, `pid`) the newest live row of doc key `dk`? */
+  private def isNewest(dk: Any, sv: SegmentView, pid: Long): Boolean =
+    newestRows.get(dk).exists { case (s2, p2) => (s2 eq sv) && p2 == pid }
 
-  private def l2(q: Array[Double], v: Array[Double]): Double = {
-    var acc = 0.0
-    var i = 0
-    val n = math.min(q.length, v.length)
-    while (i < n) { val d = q(i) - v(i); acc += d * d; i += 1 }
-    math.sqrt(acc)
+  /** Does a row match `nf`? One [[evalSegment]] pass per view, then a
+    * set lookup per row. */
+  private def matcher(nf: DocFilter): ((SegmentView, Long)) => Boolean = {
+    val matched = segments.map(sv => sv -> evalSegment(nf, sv)).toMap
+    loc => matched(loc._1).contains(loc._2)
   }
 
   // java.lang.Double.compare gives the total order with NaN greatest —
@@ -126,9 +120,12 @@ final class ServedUserView private[core] (
   /** Point-id set algebra over one segment's in-memory postings — the
     * served mirror of [[FilterCompiler.compile]] (And/Or/Ids/Term/Not,
     * rs/index/src/query/iters/mod.rs:22-27), same analyzer per field
-    * lang on the query side (index/query symmetry invariant). */
+    * lang on the query side (index/query symmetry invariant). Ids match
+    * nothing in the tail view: point ids are assigned at flush, so its
+    * ids are synthetic (the mirror of `Snapshot.compileRaw`). */
   private def evalSegment(f: DocFilter, sv: SegmentView): Set[Long] = f match {
-    case DocFilter.Ids(ids) => ids.toSet.intersect(sv.universe)
+    case DocFilter.Ids(ids) =>
+      if (sv.flushed) ids.toSet.intersect(sv.universe) else Set.empty
     case DocFilter.Contains(field, value, kw) =>
       val qts = FilterCompiler.queryTerms(field, value, kw,
         fieldLang.getOrElse(field, "english"))
@@ -220,73 +217,6 @@ final class ServedUserView private[core] (
       else cs.map(evalSegment(_, sv)).reduce(_ union _)
   }
 
-  /** Raw-row filter eval for the unflushed tail (no term index yet) —
-    * mirrors `Snapshot.compileRaw`, including Ids ≡ false (point ids are
-    * assigned at flush, so an Ids filter can never match the tail). */
-  private def evalTail(f: DocFilter, row: TailRow): Boolean = f match {
-    case DocFilter.And(cs) => cs.forall(evalTail(_, row))
-    case DocFilter.Or(cs) => cs.exists(evalTail(_, row))
-    case DocFilter.Ids(_) => false
-    case DocFilter.Contains(field, value, kw) =>
-      val qts = FilterCompiler.queryTerms(field, value, kw,
-          fieldLang.getOrElse(field, "english"))
-        .map(_.stripPrefix(s"$field:"))
-      if (qts.isEmpty) false
-      else if (kw) row.keywords.get(field).exists(v => qts.forall(_ == v))
-      else row.toks.get(field) match {
-        case Some(toks) => qts.forall(toks.contains)
-        case None => false
-      }
-    case DocFilter.NotContains(field, value, kw) =>
-      !evalTail(DocFilter.Contains(field, value, kw), row)
-    case DocFilter.Phrase(field, value, kw) =>
-      val qts = FilterCompiler.queryTerms(field, value, kw,
-          fieldLang.getOrElse(field, "english"))
-        .map(_.stripPrefix(s"$field:"))
-      if (qts.isEmpty) false
-      else if (kw) row.keywords.get(field).exists(v => qts.forall(_ == v))
-      else row.toks.get(field) match {
-        case Some(toks) if toks.size >= qts.size =>
-          toks.sliding(qts.size).exists(_ == qts)
-        case _ => false
-      }
-    case DocFilter.Near(field, l, r, w) =>
-      val lang = fieldLang.getOrElse(field, "english")
-      val lt = FilterCompiler.queryTerms(field, l, keyword = false, lang)
-        .map(_.stripPrefix(s"$field:"))
-      val rt = FilterCompiler.queryTerms(field, r, keyword = false, lang)
-        .map(_.stripPrefix(s"$field:"))
-      if (lt.isEmpty || rt.isEmpty) false
-      else row.toks.get(field).exists { toks =>
-        toks.indices.exists(i => toks(i) == lt.head &&
-          toks.indices.exists(j => toks(j) == rt.head && math.abs(i - j) <= w))
-      }
-    case DocFilter.Prefix(field, value, kw) =>
-      val p = value.trim.toLowerCase
-      if (kw) row.keywords.get(field).exists(_.startsWith(p))
-      else row.toks.get(field).exists(_.exists(_.startsWith(p)))
-    case DocFilter.Fuzzy(field, value, d, kw, pl) =>
-      val qts = FilterCompiler.queryTerms(field, value, kw,
-          fieldLang.getOrElse(field, "english"))
-        .map(_.stripPrefix(s"$field:"))
-      if (qts.isEmpty) false
-      else {
-        val pfx = qts.head.take(pl)
-        def hit(t: String): Boolean =
-          t.startsWith(pfx) && ServedUserView.editDistance(t, qts.head) <= d
-        if (kw) row.keywords.get(field).exists(hit)
-        else row.toks.get(field).exists(_.exists(hit))
-      }
-    case DocFilter.Range(field, lo, hi) =>
-      row.nums.get(field).exists(v => lo.forall(v >= _) && hi.forall(v <= _))
-    case DocFilter.Wildcard(field, pat, kw) =>
-      evalTail(DocFilter.Regex(field, DocFilter.wildcardToRegex(pat), kw), row)
-    case DocFilter.Regex(field, pat, kw) =>
-      val rx = java.util.regex.Pattern.compile(pat)
-      if (kw) row.keywords.get(field).exists(v => rx.matcher(v).matches())
-      else row.toks.get(field).exists(_.exists(t => rx.matcher(t).matches()))
-  }
-
   /** Single-query top-k over segments + tail, zero Spark jobs. An
     * attribute `filter` intersects at probe time (plan_with_ids, F8/J4)
     * — parity with the distributed `Snapshot.search(filter = ...)`. */
@@ -294,7 +224,7 @@ final class ServedUserView private[core] (
       filter: Option[DocFilter] = None): Seq[(Any, Double)] = {
     val nf = filter.map(norm)
     nf.foreach(requireNumericFields)
-    val fromSegments = segments.iterator.flatMap { sv =>
+    segments.iterator.flatMap { sv =>
       val allow: java.util.function.LongPredicate = nf match {
         case None => null
         case Some(f) =>
@@ -304,12 +234,7 @@ final class ServedUserView private[core] (
       sv.index.search(query, k, nprobe, allow).iterator.flatMap { case (pid, dist) =>
         sv.docOf.get(pid).map(doc => (doc, dist))
       }
-    }
-    val fromTail = tailRows.iterator
-      .filter(row => nf.forall(evalTail(_, row)))
-      .map(row => (row.docId, l2(query, row.vector)))
-    (fromSegments ++ fromTail)
-      .toArray
+    }.toArray
       .sorted(scoreOrd)
       .take(k)
       .toSeq
@@ -321,12 +246,9 @@ final class ServedUserView private[core] (
   def termSearch(filter: DocFilter, limit: Int): Seq[Any] = {
     val nf = norm(filter)
     requireNumericFields(nf)
-    val fromSegments = segments.iterator.flatMap { sv =>
+    segments.iterator.flatMap { sv =>
       evalSegment(nf, sv).iterator.flatMap(sv.docOf.get)
-    }
-    val fromTail = tailRows.iterator.filter(evalTail(nf, _)).map(_.docId)
-    (fromSegments ++ fromTail)
-      .toArray
+    }.toArray
       .distinct
       .sortWith(idLess)
       .take(limit)
@@ -349,19 +271,11 @@ final class ServedUserView private[core] (
         "field with kind long/double in attributeSchema")
     val nf = norm(filter)
     requireNumericFields(nf)
-    val segMatch: Map[String, Set[Long]] =
-      segments.map(sv => sv.name -> evalSegment(nf, sv)).toMap
+    val hit = matcher(nf)
     val counts = Array.fill(buckets.size)(0L)
-    for ((_, where) <- newestRows) {
-      val value: Option[Double] = where match {
-        case Left((sv, pid)) if segMatch(sv.name).contains(pid) =>
-          sv.numAttrs.getOrElse(field, Map.empty).get(pid)
-        case Right(row) if evalTail(nf, row) => row.nums.get(field)
-        case _ => None
-      }
-      for (v <- value; i <- buckets.indices)
-        if (v >= buckets(i)._1 && v < buckets(i)._2) counts(i) += 1
-    }
+    for (loc @ (sv, pid) <- newestRows.values if hit(loc);
+         v <- sv.numAttrs.getOrElse(field, Map.empty).get(pid); i <- buckets.indices)
+      if (v >= buckets(i)._1 && v < buckets(i)._2) counts(i) += 1
     buckets.zip(counts.toSeq)
   }
 
@@ -375,17 +289,11 @@ final class ServedUserView private[core] (
       k: Int = 10): Seq[(Option[String], Long)] = {
     val nf = norm(filter)
     requireNumericFields(nf)
-    val segMatch: Map[String, Set[Long]] =
-      segments.map(sv => sv.name -> evalSegment(nf, sv)).toMap
+    val hit = matcher(nf)
     val counts = scala.collection.mutable.HashMap[Option[String], Long]()
-    for ((_, where) <- newestRows) {
-      val matched: Option[Option[String]] = where match {
-        case Left((sv, pid)) if segMatch(sv.name).contains(pid) =>
-          Some(sv.attrVals.getOrElse(facetField, Map.empty).get(pid))
-        case Right(row) if evalTail(nf, row) => Some(row.attrs.get(facetField))
-        case _ => None
-      }
-      for (v <- matched) counts(v) = counts.getOrElse(v, 0L) + 1
+    for (loc @ (sv, pid) <- newestRows.values if hit(loc)) {
+      val v = sv.attrVals.getOrElse(facetField, Map.empty).get(pid)
+      counts(v) = counts.getOrElse(v, 0L) + 1
     }
     counts.toSeq.sortWith { case ((v1, n1), (v2, n2)) =>
       if (n1 != n2) n1 > n2
@@ -402,41 +310,22 @@ final class ServedUserView private[core] (
     * live term dictionary (optionally prefix-restricted), each term
     * counting the docs whose NEWEST live version carries it, top `k` by
     * (n_docs desc, term asc). */
-  def termStats(prefix: String = "", k: Int = 20): Seq[(String, Long)] = {
+  def termStats(prefix: String = "", k: Int = 20): Seq[(String, Long)] =
+    newestDocsPerTerm(_.startsWith(prefix)).toSeq
+      .sortBy { case (t, n) => (-n, t) }.take(k)
+
+  /** Dictionary terms passing `keep`, each with the number of docs whose
+    * NEWEST live row carries it. */
+  private def newestDocsPerTerm(keep: String => Boolean): Map[String, Long] = {
     val docsOf = scala.collection.mutable.HashMap[String, scala.collection.mutable.Set[Any]]()
-    for (sv <- segments;
-         (t, posts) <- sv.termPostings if prefix.isEmpty || t.startsWith(prefix);
+    for (sv <- segments; (t, posts) <- sv.termPostings if keep(t);
          (pid, _) <- posts; doc <- sv.docOf.get(pid)) {
       val dk = docKey(doc)
-      val isNewest = newestRows.get(dk).exists {
-        case Left((s2, p2)) => (s2 eq sv) && p2 == pid
-        case _ => false
-      }
-      if (isNewest) docsOf.getOrElseUpdate(t, scala.collection.mutable.Set()) += dk
+      if (isNewest(dk, sv, pid))
+        docsOf.getOrElseUpdate(t, scala.collection.mutable.Set()) += dk
     }
-    for (row <- tailRows) {
-      val dk = docKey(row.docId)
-      val isNewest = newestRows.get(dk).exists {
-        case Right(r2) => r2 eq row
-        case _ => false
-      }
-      if (isNewest)
-        for (t <- tailTermKeys(row) if prefix.isEmpty || t.startsWith(prefix))
-          docsOf.getOrElseUpdate(t, scala.collection.mutable.Set()) += dk
-    }
-    docsOf.iterator.map { case (t, docs) => (t, docs.size.toLong) }
-      .toSeq.sortBy { case (t, n) => (-n, t) }.take(k)
+    docsOf.iterator.map { case (t, docs) => (t, docs.size.toLong) }.toMap
   }
-
-  /** All term keys of one tail row across its text fields — the
-    * index-side analysis mirrored (keyword fields key the whole
-    * lowercased value; text fields their analyzed tokens). */
-  private def tailTermKeys(row: TailRow): Seq[String] =
-    row.toks.keys.toSeq.flatMap { f =>
-      if (keywordFields.contains(f))
-        row.keywords.get(f).map(v => s"$f:$v").toSeq
-      else row.toks(f).distinct.map(t => s"$f:$t")
-    }
 
   /** Served mirror of [[Snapshot.suggest]] with zero Spark jobs
     * (round-15 verdict #7): live dictionary terms of `field` within
@@ -462,45 +351,9 @@ final class ServedUserView private[core] (
     // invert: candidate terms from the dictionary first (O(distinct
     // terms), the Fuzzy scan shape), then count docs whose NEWEST row
     // carries each candidate
-    val docsOf = scala.collection.mutable.HashMap[String, scala.collection.mutable.Set[Any]]()
-    for (sv <- segments; (t, posts) <- sv.termPostings if hit(t);
-         (pid, _) <- posts; doc <- sv.docOf.get(pid)) {
-      val dk = docKey(doc)
-      val isNewest = newestRows.get(dk).exists {
-        case Left((s2, p2)) => (s2 eq sv) && p2 == pid
-        case _ => false
-      }
-      if (isNewest) docsOf.getOrElseUpdate(t, scala.collection.mutable.Set()) += dk
-    }
-    for (row <- tailRows) {
-      val dk = docKey(row.docId)
-      val isNewest = newestRows.get(dk).exists {
-        case Right(r2) => r2 eq row
-        case _ => false
-      }
-      if (isNewest) {
-        val termKeys: Seq[String] =
-          if (kw) row.keywords.get(field).map(v => s"$fp$v").toSeq
-          else row.toks.getOrElse(field, Vector.empty).distinct.map(t => s"$fp$t")
-        for (t <- termKeys if hit(t))
-          docsOf.getOrElseUpdate(t, scala.collection.mutable.Set()) += dk
-      }
-    }
-    docsOf.iterator.map { case (t, docs) =>
-      (t, ServedUserView.editDistance(t.substring(fp.length), token).toLong,
-        docs.size.toLong)
-    }.toSeq.sortBy { case (t, d, n) => (d, -n, t) }.take(k)
-  }
-
-  /** Analyzed token count of `field` on one doc's newest live row —
-    * segment rows read the lens slice ([[SegmentView.dlFor]]), tail rows
-    * their analyzed tokens (keyword fields: the whole value = 1 token). */
-  private def docLenAt(field: String, kw: Boolean)(
-      loc: Either[(SegmentView, Long), TailRow]): Long = loc match {
-    case Left((sv, pid)) => sv.dlFor(field, pid)
-    case Right(row) =>
-      if (kw) row.keywords.get(field).fold(0L)(_ => 1L)
-      else row.toks.get(field).fold(0L)(_.length.toLong)
+    newestDocsPerTerm(hit).toSeq.map { case (t, n) =>
+      (t, ServedUserView.editDistance(t.substring(fp.length), token).toLong, n)
+    }.sortBy { case (t, d, n) => (d, -n, t) }.take(k)
   }
 
   /** Memoized BM25 corpus statistics (N, avgdl) per field — the served
@@ -510,12 +363,11 @@ final class ServedUserView private[core] (
     scala.collection.concurrent.TrieMap.empty[String, (Long, Double)]
   private def bm25FieldStats(field: String): (Long, Double) =
     bm25StatsMemo.getOrElseUpdate(field, {
-      val kw = keywordFields.contains(field)
       var n = 0L
       var total = 0L
-      for ((_, loc) <- newestRows) {
+      for ((sv, pid) <- newestRows.values) {
         n += 1
-        total += docLenAt(field, kw)(loc)
+        total += sv.dlFor(field, pid)
       }
       (n, if (n == 0L) 0.0 else total.toDouble / n)
     })
@@ -538,7 +390,7 @@ final class ServedUserView private[core] (
     val keys = FilterCompiler.queryTerms(field, query, kw,
       fieldLang.getOrElse(field, "english")).distinct
     if (keys.isEmpty) Nil
-    else rankedByKeys(field, kw, keys, k, k1, b, exclude = Set.empty,
+    else rankedByKeys(field, keys, k, k1, b, exclude = Set.empty,
       keep = newestMatchPredicate(filter))
   }
 
@@ -552,12 +404,8 @@ final class ServedUserView private[core] (
       case Some(f) =>
         val nf = norm(f)
         requireNumericFields(nf)
-        val segMatch: Map[String, Set[Long]] =
-          segments.map(sv => sv.name -> evalSegment(nf, sv)).toMap
-        dk => newestRows.get(dk).exists {
-          case Left((sv, pid)) => segMatch(sv.name).contains(pid)
-          case Right(row) => evalTail(nf, row)
-        }
+        val hit = matcher(nf)
+        dk => newestRows.get(dk).exists(hit)
     }
 
   /** The ranked-retrieval field contract (mirror of the Snapshot's):
@@ -580,41 +428,21 @@ final class ServedUserView private[core] (
     * over a doc's newest row — shared by [[rankedSearch]] (scoring) and
     * [[moreLikeThis]] (profile doc frequencies). Postings-driven:
     * O(matched), never a corpus iteration. */
-  private def bm25Candidates(field: String, kw: Boolean, keys: Seq[String])
-      : (Map[Any, Either[(SegmentView, Long), TailRow]],
-         (Either[(SegmentView, Long), TailRow], String) => Long) = {
-    val fp = s"$field:"
+  private def bm25Candidates(keys: Seq[String])
+      : (Map[Any, (SegmentView, Long)], ((SegmentView, Long), String) => Long) = {
     // per-(segment, key) pid -> tf, built once (postings-array scans stay
     // linear, never per-candidate)
-    val segTf: Map[(String, String), Map[Long, Long]] =
-      (for (sv <- segments; key <- keys) yield (sv.name, key) ->
+    val segTf: Map[(SegmentView, String), Map[Long, Long]] =
+      (for (sv <- segments; key <- keys) yield (sv, key) ->
         sv.termPostings.getOrElse(key, ServedUserView.noPostings)
           .iterator.map { case (p, pos) => p -> pos.length.toLong }.toMap).toMap
-    def tfOf(loc: Either[(SegmentView, Long), TailRow], key: String): Long =
-      loc match {
-        case Left((sv, pid)) => segTf((sv.name, key)).getOrElse(pid, 0L)
-        case Right(row) =>
-          val bare = key.stripPrefix(fp)
-          if (kw) { if (row.keywords.get(field).contains(bare)) 1L else 0L }
-          else row.toks.get(field).fold(0L)(_.count(_ == bare).toLong)
-      }
-    val cand = scala.collection.mutable.HashMap
-      .empty[Any, Either[(SegmentView, Long), TailRow]]
-    for (sv <- segments; key <- keys; (pid, _) <- segTf((sv.name, key));
+    def tfOf(loc: (SegmentView, Long), key: String): Long =
+      segTf((loc._1, key)).getOrElse(loc._2, 0L)
+    val cand = scala.collection.mutable.HashMap.empty[Any, (SegmentView, Long)]
+    for (sv <- segments; key <- keys; (pid, _) <- segTf((sv, key));
          doc <- sv.docOf.get(pid)) {
       val dk = docKey(doc)
-      newestRows.get(dk) match {
-        case Some(l @ Left((s2, p2))) if (s2 eq sv) && p2 == pid => cand(dk) = l
-        case _ => ()
-      }
-    }
-    for (row <- tailRows) {
-      val dk = docKey(row.docId)
-      newestRows.get(dk) match {
-        case Some(r @ Right(r2)) if r2 eq row =>
-          if (keys.exists(tfOf(r, _) > 0L)) cand(dk) = r
-        case _ => ()
-      }
+      if (isNewest(dk, sv, pid)) cand(dk) = (sv, pid)
     }
     (cand.toMap, tfOf)
   }
@@ -624,19 +452,19 @@ final class ServedUserView private[core] (
     * core of [[rankedSearch]], [[moreLikeThis]] and
     * [[rankedSearchFields]] (same per-field figures as the distributed
     * [[graft.core.Snapshot]] paths). */
-  private def scoreByKeys(field: String, kw: Boolean, keys: Seq[String],
+  private def scoreByKeys(field: String, keys: Seq[String],
       k1: Double, b: Double): Map[Any, (Any, Double, Long)] = {
     val (n, avgdl) = bm25FieldStats(field)
     if (n == 0L) return Map.empty
-    val (cand, tfOf) = bm25Candidates(field, kw, keys)
+    val (cand, tfOf) = bm25Candidates(keys)
     if (cand.isEmpty) return Map.empty
     // df per query term over the newest-wins match set (the distributed
     // bm25Score's O(matched) aggregate)
     val dfOf: Map[String, Long] = keys.map(key =>
       key -> cand.valuesIterator.count(tfOf(_, key) > 0L).toLong).toMap
     val nD = n.toDouble
-    cand.iterator.map { case (dk, loc) =>
-      val dl = docLenAt(field, kw)(loc).toDouble
+    cand.iterator.map { case (dk, loc @ (sv, pid)) =>
+      val dl = sv.dlFor(field, pid).toDouble
       var sum = 0.0
       var hits = 0L
       for (key <- keys) {
@@ -649,11 +477,7 @@ final class ServedUserView private[core] (
           sum += idf * (t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * dl / avgdl)))
         }
       }
-      val id: Any = loc match {
-        case Left((sv, pid)) => sv.docOf(pid)
-        case Right(row) => row.docId
-      }
-      dk -> ((id, BigDecimal(sum).setScale(4, BigDecimal.RoundingMode.HALF_UP)
+      dk -> ((sv.docOf(pid), BigDecimal(sum).setScale(4, BigDecimal.RoundingMode.HALF_UP)
         .toDouble, hits))
     }.filter(_._2._3 > 0L).toMap
   }
@@ -669,10 +493,10 @@ final class ServedUserView private[core] (
     * order/limit. `exclude` drops doc keys from the RESULT only (after
     * df/stats), the Lucene MLT contract; `keep` retains only passing
     * keys (filter context, same after-scoring discipline). */
-  private def rankedByKeys(field: String, kw: Boolean, keys: Seq[String],
+  private def rankedByKeys(field: String, keys: Seq[String],
       k: Int, k1: Double, b: Double, exclude: Set[Any],
       keep: Any => Boolean = _ => true): Seq[(Any, Double, Long)] =
-    orderRanked(scoreByKeys(field, kw, keys, k1, b)
+    orderRanked(scoreByKeys(field, keys, k1, b)
       .collect { case (dk, t) if !exclude.contains(dk) && keep(dk) => t }, k)
 
   /** Served mirror of [[Snapshot.rankedSearchFields]] with zero Spark
@@ -694,7 +518,7 @@ final class ServedUserView private[core] (
       val keys = FilterCompiler.queryTerms(field, query, kw,
         fieldLang.getOrElse(field, "english")).distinct
       if (keys.nonEmpty)
-        for ((dk, (id, sc, _)) <- scoreByKeys(field, kw, keys, k1, b)
+        for ((dk, (id, sc, _)) <- scoreByKeys(field, keys, k1, b)
              if keep(dk)) {
           val (_, s0, f0) = acc.getOrElse(dk, (id, 0.0, 0L))
           acc(dk) = (id, s0 + w * sc, f0 + 1L)
@@ -732,8 +556,8 @@ final class ServedUserView private[core] (
   }
 
   /** Served mirror of [[Snapshot.moreLikeThis]] with zero Spark jobs:
-    * profile the seed's newest live `field` value (segment rows read the
-    * attribute slice, tail rows their stored value) by its `m` most
+    * profile the seed's newest live `field` value (its view's attribute
+    * slice) by its `m` most
     * distinctive terms — identical smoothed-tf-idf rounding and ties to
     * the distributed path — then BM25 those terms, seed excluded after
     * scoring. */
@@ -743,12 +567,9 @@ final class ServedUserView private[core] (
     require(m > 0 && k > 0, s"moreLikeThis: m and k must be positive (m=$m, k=$k)")
     val kw = requireRankedField(field)
     val dk = docKey(docId)
-    val loc = newestRows.getOrElse(dk, throw new IllegalArgumentException(
+    val (sv, pid) = newestRows.getOrElse(dk, throw new IllegalArgumentException(
       s"moreLikeThis: no live doc for the given key"))
-    val text: String = loc match {
-      case Left((sv, pid)) => sv.attrVals.get(field).flatMap(_.get(pid)).getOrElse("")
-      case Right(row) => row.keywords.getOrElse(field, "")
-    }
+    val text = sv.attrVals.get(field).flatMap(_.get(pid)).getOrElse("")
     val termsAll = FilterCompiler.queryTerms(field, text, kw,
       fieldLang.getOrElse(field, "english"))
     require(termsAll.nonEmpty,
@@ -757,7 +578,7 @@ final class ServedUserView private[core] (
       termsAll.groupBy(identity).view.mapValues(_.size.toLong).toMap
     val termKeys = seedTf.keys.toSeq
     val (n, _) = bm25FieldStats(field)
-    val (cand, tfOf) = bm25Candidates(field, kw, termKeys)
+    val (cand, tfOf) = bm25Candidates(termKeys)
     val profile = seedTf.toSeq.map { case (t, tf) =>
       val df = cand.valuesIterator.count(tfOf(_, t) > 0L).toDouble
       val sc = BigDecimal(tf.toDouble *
@@ -767,7 +588,7 @@ final class ServedUserView private[core] (
     }.sortBy { case (t, sc) => (-sc, t) }.take(m).map(_._1)
     // filter context: profile/df/stats above stay unfiltered, only the
     // returned similar docs are restricted (the rankedSearch contract)
-    rankedByKeys(field, kw, profile, k, k1, b, exclude = Set(dk),
+    rankedByKeys(field, profile, k, k1, b, exclude = Set(dk),
       keep = newestMatchPredicate(filter))
   }
 }
@@ -799,35 +620,50 @@ object ServedUserView {
     prev(s.length)
   }
 
-  private[core] final case class SegmentView(
-      name: String, // segment name — positional capability errors cite it
-      index: ServedIvfIndex,
-      docOf: Map[Long, Any], // point_id -> doc_id (tombstoned points absent)
+  /** Unsigned-lexicographic for BinaryType ids, natural for Long ids —
+    * matches Spark's sort order on the corresponding column types. */
+  private def idLess(a: Any, b: Any): Boolean = (a, b) match {
+    case (x: Long, y: Long) => x < y
+    case (x: Array[Byte], y: Array[Byte]) =>
+      java.util.Arrays.compareUnsigned(x, y) < 0
+    case _ => a.toString < b.toString
+  }
+
+  /** One served segment — a flushed one, or the unflushed tail. A plain
+    * class: maps keyed by a view key its identity, never its contents. */
+  private[core] final class SegmentView(
+      val name: String, // segment name — positional capability errors cite it
+      val index: ServedIvfIndex,
+      val docOf: Map[Long, Any], // point_id -> doc_id (tombstoned points absent)
       // term key -> (point id, positions in the analyzed stream); the
       // positions ride the same per-user collect as the ids — memory
       // stays bounded by one user's corpus, and phrase/proximity queries
       // serve with zero Spark jobs like everything else here
-      termPostings: Map[String, Array[(Long, Array[Int])]],
+      val termPostings: Map[String, Array[(Long, Array[Int])]],
       // false for segments flushed before the positions column landed:
       // Contains still serves; Phrase/Near fail descriptively
-      hasPositions: Boolean,
+      val hasPositions: Boolean,
       // numeric attribute slice: field -> (point -> value); null attr
       // values are absent (a Range never matches them). A field KEY is
       // present iff the segment's vectors table carried the column —
-      // the per-segment Range capability signal.
-      numAttrs: Map[String, Map[Long, Double]] = Map.empty,
+      // the per-segment Range capability signal (the tail keys every
+      // numeric field: its rows lack a value, never the capability).
+      val numAttrs: Map[String, Map[Long, Double]],
       // point -> src_batch WAL position (MinValue when the segment
       // predates the column) — feeds the newest-wins aggregation mirrors
-      batchOf: Map[Long, Long] = Map.empty,
+      val batchOf: Map[Long, Long],
       // schema attribute values STRING-CAST on their original column
       // type (so a long 15 reads "15", matching the distributed
       // facetCounts' cast exactly); nulls absent
-      attrVals: Map[String, Map[Long, String]] = Map.empty,
+      val attrVals: Map[String, Map[Long, String]],
       // flush-persisted BM25 doc-length norms: field -> point -> dl
-      // (empty for segments flushed before the lens table landed —
-      // dlFor then derives identical numbers from the positions,
-      // minus zero-token docs, the distributed fallback's caveat)
-      lensOf: Map[String, Map[Long, Long]] = Map.empty) {
+      // (empty for segments flushed before the lens table landed, and
+      // for the tail — dlFor then derives identical numbers from the
+      // positions, minus zero-token docs, the distributed fallback's
+      // caveat)
+      val lensOf: Map[String, Map[Long, Long]],
+      // false for the unflushed tail: its point ids are synthetic
+      val flushed: Boolean) {
     val universe: Set[Long] = docOf.keySet
 
     private val derivedDl =
@@ -846,15 +682,6 @@ object ServedUserView {
         }).getOrElse(pid, 0L))
   }
 
-  private[core] final case class TailRow(
-      docId: Any,
-      vector: Array[Double],
-      toks: Map[String, Vector[String]], // text field -> analyzed tokens, IN ORDER
-      keywords: Map[String, String], // text/keyword field -> lowercased value
-      nums: Map[String, Double] = Map.empty, // numeric field -> value (nulls absent)
-      srcBatch: Long = Long.MinValue, // WAL position (newest-wins mirrors)
-      attrs: Map[String, String] = Map.empty) // string-cast schema attrs (nulls absent)
-
   private[core] def build(coll: Collection, userId: Any): ServedUserView = {
     val t = coll.toc
     val uid = lit(userId)
@@ -867,51 +694,65 @@ object ServedUserView {
     // (Search.dropTombstoned): a doc re-inserted after its delete is live,
     // so it must run while rows still carry src_batch (before the select).
     val userTombs = coll.tombstones.map(_.filter(col("user_id") === uid))
-    def dropTombs(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      userTombs.fold(df)(tb => graft.operators.Search.dropTombstoned(df, tb))
+    def userRows(df: DataFrame): DataFrame = {
+      val mine = df.filter(col("user_id") === uid)
+      userTombs.fold(mine)(tb => graft.operators.Search.dropTombstoned(mine, tb))
+    }
     val numFieldNames = coll.config.numericFields.map(_.name)
     val schemaFieldNames = coll.config.attributeSchema.map(_.name)
-    val segs = t.segments.map { seg =>
-      val record = coll.segment(seg)
-      val userRows = dropTombs(coll.vectorsFor(seg, Seq(userId))
-        .filter(col("user_id") === uid))
-      // ONE bounded collect of the user's live rows feeds the whole view:
-      // point ids, doc ids, src_batch WAL positions (the newest-wins
-      // aggregation mirrors need them; MinValue for a row without one),
-      // the vector store, and the numeric (Range leaves) and string-cast
-      // schema attributes. Point-id order is the serving index's
-      // point-store order.
-      val cols = userRows.columns.toSet
-      val presentNums = numFieldNames.filter(cols)
-      val presentAttrs = schemaFieldNames.filter(cols)
-      val rows = userRows.select((Seq(col("point_id").cast("long"), col("doc_id"),
+    // ONE bounded collect of a view's live rows feeds the whole view:
+    // point ids, doc ids, src_batch WAL positions (the newest-wins
+    // aggregation mirrors need them; MinValue for a row without one), the
+    // vector store, the `nums` attributes (Range leaves; null where the
+    // frame lacks the column), every schema attribute the frame carries
+    // STRING-CAST on its original column type (what the served
+    // facetCounts mirror buckets on — exact parity with the distributed
+    // cast("string")), then `extra`. Returns the rows and those attributes.
+    def collectRows(df: DataFrame, pointId: Column, nums: Seq[String],
+        extra: Seq[Column]): (Array[Row], Seq[String]) = {
+      val attrs = schemaFieldNames.filter(df.columns.contains)
+      val rows = df.select((Seq(pointId, col("doc_id"),
           coalesce(col("src_batch"), lit(Long.MinValue)),
           col("vector").cast("array<double>")) ++
-        presentNums.map(f => col(f).cast("double")) ++
-        // every schema attribute STRING-CAST on its original column type —
-        // what the served facetCounts mirror buckets on (exact parity with
-        // the distributed cast("string"))
-        presentAttrs.map(f => col(f).cast("string"))): _*)
-        .collect().sortBy(_.getLong(0))
-      val docOf: Map[Long, Any] = rows.map(r => r.getLong(0) -> r.get(1)).toMap
-      val batchOf: Map[Long, Long] = rows.map(r => r.getLong(0) -> r.getLong(2)).toMap
-      // attribute slices: field -> (point -> value), nulls absent (a Range
-      // never matches null; facet buckets skip it)
+        nums.map(f => (if (df.columns.contains(f)) col(f) else lit(null)).cast("double")) ++
+        attrs.map(f => col(f).cast("string")) ++ extra): _*)
+        .collect()
+      (rows, attrs)
+    }
+    // point ids and vectors of rows in collectRows' layout: the serving
+    // index's point store
+    def points(rows: Array[Row]) = rows.iterator.map(r => (r.getLong(0), r.getSeq[Double](3)))
+    // one view's maps from rows in collectRows' layout; attribute slices
+    // are field -> (point -> value), nulls absent (a Range never matches
+    // null; facet buckets skip it)
+    def view(name: String, rows: Array[Row], nums: Seq[String], attrs: Seq[String],
+        index: ServedIvfIndex, termPostings: Map[String, Array[(Long, Array[Int])]],
+        hasPositions: Boolean, lensOf: Map[String, Map[Long, Long]],
+        flushed: Boolean): SegmentView = {
       def slice[V](fields: Seq[String], base: Int, get: (Row, Int) => V): Map[String, Map[Long, V]] =
         fields.zipWithIndex.map { case (f, i) =>
           f -> rows.iterator.filterNot(_.isNullAt(base + i))
             .map(r => r.getLong(0) -> get(r, base + i)).toMap
         }.toMap
-      val numAttrs = slice(presentNums, 4, _.getDouble(_))
-      val attrVals = slice(presentAttrs, 4 + presentNums.size, _.getString(_))
+      new SegmentView(name, index, rows.map(r => r.getLong(0) -> r.get(1)).toMap,
+        termPostings, hasPositions, slice(nums, 4, _.getDouble(_)),
+        rows.map(r => r.getLong(0) -> r.getLong(2)).toMap,
+        slice(attrs, 4 + nums.size, _.getString(_)), lensOf, flushed)
+    }
+    val segs = t.segments.map { seg =>
+      val record = coll.segment(seg)
+      val df = userRows(coll.vectorsFor(seg, Seq(userId)))
+      val nums = numFieldNames.filter(df.columns.contains)
+      val (collected, attrs) = collectRows(df, col("point_id").cast("long"), nums, Nil)
+      // point-id order is the serving index's point-store order
+      val rows = collected.sortBy(_.getLong(0))
       // postings referencing dropped points are dangling; assemble
       // discards posting entries with no backing vector. Stage-1 selector
       // follows the collection config; with "hnsw" the flush-time
       // hnsw.bin loads here (seconds) instead of rebuilding the centroid
       // graph on every serving (re)start.
       val served = ServedIvfIndex.assemble(
-        ServedIvfIndex.collectCentroids(record.centroids),
-        rows.length, rows.iterator.map(r => (r.getLong(0), r.getSeq[Double](3))),
+        ServedIvfIndex.collectCentroids(record.centroids), rows.length, points(rows),
         ServedIvfIndex.collectPostings(
           record.postings.filter(col("user_id") === uid)),
         centroidIndex = coll.config.centroidIndexType,
@@ -939,48 +780,44 @@ object ServedUserView {
           .groupBy(_.getString(0))
           .map { case (f, rows) =>
             f -> rows.map(r => r.getLong(1) -> r.getLong(2)).toMap }
-      SegmentView(seg, served, docOf, termPostings, record.hasPositions, numAttrs,
-        batchOf, attrVals, lensOf)
+      view(seg, rows, nums, attrs, served, termPostings, record.hasPositions,
+        lensOf, flushed = true)
     }
-    // analyzed text rides out of the same Spark expressions the index side
-    // uses (analyze_text per field lang), so tail term matching keeps the
-    // index/query analyzer symmetry without re-implementing the stemmers
-    val textFields = coll.config.textFields
-    val tailRows: Array[TailRow] = coll.tailFor(t) match {
-      case None => Array.empty
-      case Some(rows) =>
-        import graft.functions.GraftFunctions.analyze_text
-        val present = textFields.filter(f => rows.columns.contains(f.name))
-        val presentNums = numFieldNames.filter(rows.columns.contains)
-        val tokCols = present.flatMap { f =>
-          Seq(analyze_text(col(f.name), lit(f.lang)).as(s"__toks_${f.name}"),
-            lower(col(f.name)).as(s"__kw_${f.name}"))
-        } ++ presentNums.map(f => col(f).cast("double").as(s"__num_$f"))
-        val presentAttrs = schemaFieldNames.filter(rows.columns.contains)
-        val selected = dropTombs(rows.filter(col("user_id") === uid))
-          .select((Seq(col("doc_id"), col("vector").cast("array<double>")) ++
-            tokCols ++ Seq(col("src_batch").cast("long")) ++
-            presentAttrs.map(f => col(f).cast("string"))): _*)
-          .collect()
-        val numBase = 2 + 2 * present.size
-        val sbIdx = numBase + presentNums.size
-        selected.map { r =>
-          val toks = present.zipWithIndex.map { case (f, i) =>
-            f.name -> Option(r.getSeq[String](2 + 2 * i)).getOrElse(Nil).toVector
-          }.toMap
-          val kws = present.zipWithIndex.flatMap { case (f, i) =>
-            Option(r.getString(3 + 2 * i)).map(f.name -> _)
-          }.toMap
-          val nums = presentNums.zipWithIndex.flatMap { case (f, j) =>
-            if (r.isNullAt(numBase + j)) None else Some(f -> r.getDouble(numBase + j))
-          }.toMap
-          val attrs = presentAttrs.zipWithIndex.flatMap { case (f, j) =>
-            Option(r.getString(sbIdx + 1 + j)).map(f -> _)
-          }.toMap
-          TailRow(r.get(0), r.getSeq[Double](1).toArray, toks, kws, nums, r.getLong(sbIdx), attrs)
-        }
-    }
-    new ServedUserView(segs, tailRows, fieldLang,
+    // The unflushed tail as one more segment view (the reference's mutable
+    // segment, mutable_segment.rs:73-103). Its postings come out of the
+    // same collect, built by the flush's own expressions (buildSegment's
+    // per-field token arrays, materialized once per row, then
+    // term_postings), so the index/query analyzer symmetry holds without
+    // re-implementing the stemmers and the view answers as the flushed
+    // segment will.
+    val tail = coll.tailFor(t).map { rows0 =>
+      import graft.functions.GraftFunctions.{analyze_text, term_postings}
+      val present = coll.config.textFields.filter(f => rows0.columns.contains(f.name))
+      val df = userRows(rows0).select(col("*") +: present.map { f =>
+        (if (f.kind == "keyword") array(lower(col(f.name)))
+         else analyze_text(col(f.name), lit(f.lang))).as(s"__toks_${f.name}")
+      }: _*)
+      val (collected, attrs) = collectRows(df, lit(0L), numFieldNames,
+        present.map(f => term_postings(f.name, col(s"__toks_${f.name}"))))
+      // synthetic point ids in doc_id order, so the index's per-view top-k
+      // by (dist, id) keeps exactly the rows the (score, doc_id) merge keeps
+      val rows = collected.sortWith((a, b) => idLess(a.get(1), b.get(1)))
+        .zipWithIndex.map { case (r, i) => Row.fromSeq(i.toLong +: r.toSeq.tail) }
+      val base = 4 + numFieldNames.size + attrs.size
+      // a null value has no terms (a keyword field's null token)
+      val termPostings = (for (r <- rows; j <- present.indices;
+          tp <- Option(r.getSeq[Row](base + j)).getOrElse(Nil) if !tp.isNullAt(0))
+        yield (tp.getString(0), (r.getLong(0), tp.getSeq[Int](1).toArray)))
+        .groupBy(_._1).map { case (term, ps) => term -> ps.map(_._2) }
+      // one zero centroid holding every point: a probe is an exact scan,
+      // its distance the plain L2 over the query's dims
+      val served = ServedIvfIndex.assemble(
+        Array(0 -> new Array[Double](coll.config.numFeatures)), rows.length,
+        points(rows), rows.map(r => 0 -> r.getLong(0)))
+      view("unflushed tail", rows, numFieldNames, attrs, served, termPostings,
+        hasPositions = true, lensOf = Map.empty, flushed = false)
+    }.filter(_.docOf.nonEmpty)
+    new ServedUserView(segs ++ tail, fieldLang,
       coll.config.attributeSchema.filter(_.kind == "keyword").map(_.name).toSet,
       numFieldNames.toSet)
   }

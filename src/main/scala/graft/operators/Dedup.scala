@@ -479,7 +479,9 @@ object Dedup {
     * per-component stars in O(log^2 n) rounds even on path graphs —
     * unlike one-hop min-label propagation, whose round count grows with
     * the graph diameter. Every round `localCheckpoint`s the edge set so
-    * lineage stays flat regardless of iteration count.
+    * lineage stays flat regardless of iteration count, and frees the
+    * previous round's checkpoint once the new one has materialized, so at
+    * most two rounds' edges are held at any time (one after the return).
     *
     * Returns `[id, keep_id]` for every id that appears in a pair, with
     * keep_id = the smallest id of its component: drop rows where
@@ -614,8 +616,13 @@ object Dedup {
         .select(col("u"), least(col("mn"), col("u")).as("m"))
       (nbr, mins)
     }
+    // Dataset.unpersist does not reach a checkpoint's blocks (they belong
+    // to the RDD under the plan, not to a cache entry), so free that RDD
+    def dropCheckpoint(df: DataFrame): Unit = df.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
     var edges = canon(init).localCheckpoint()
-    var cached: List[DataFrame] = edges :: Nil
     var prev: (Long, Option[Long]) = (-1L, None)
     var iter = 0
     var converged = false
@@ -627,12 +634,15 @@ object Dedup {
           .select(col("v").as("u"), col("m").as("v")))
       // small-star: connect smaller neighbors (and u itself) to the min
       val (nbrS, minsS) = neighborMins(afterLarge)
-      edges = canon(
+      val next = canon(
         nbrS.join(minsS, Seq("u")).where(col("v") < col("u"))
           .select(col("v").as("u"), col("m").as("v"))
           .union(minsS.select(col("u"), col("m").as("v"))))
         .localCheckpoint()
-      cached ::= edges
+      // the eager checkpoint has materialized `next` with its lineage cut:
+      // nothing reads the previous round's edges any more
+      dropCheckpoint(edges)
+      edges = next
       // convergence = edge set unchanged (count + order-free xor of hashes;
       // xor never overflows under ANSI and distinct edges can't cancel)
       val row = edges.agg(count(lit(1)), expr("bit_xor(xxhash64(u, v))")).head()
@@ -648,7 +658,8 @@ object Dedup {
       .select(col("id"), coalesce(col("keep_id"), col("id")).as("keep_id"))
       .persist()
     out.count()
-    cached.foreach(_.unpersist(blocking = false))
+    // the last round's checkpoint stays: `out` recomputes from it if its
+    // cache is dropped, and the context cleaner frees it with `out`
     out
   }
 

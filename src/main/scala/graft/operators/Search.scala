@@ -482,16 +482,27 @@ object Search {
     // df per query term over the caller's live+deduped frame; bounded by
     // |q| keys -> broadcast back
     val dfq = m.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val idf = log(lit(1.0) +
-      (lit(nDocs.toDouble) - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val tfNorm = col("tf") * (lit(k1) + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl").cast("double") / lit(avgdl)))
     m.join(docLens.select(col("user_id"), col("doc_id"), col("dl")),
         Seq("user_id", "doc_id"))
       .join(broadcast(dfq), Seq("term"))
       .groupBy("user_id", "doc_id")
-      .agg(round(sum(idf * tfNorm), 4).as("score"),
+      .agg(round(sum(okapiTerm(lit(nDocs.toDouble), lit(avgdl),
+          col("dl").cast("double"), k1, b)), 4).as("score"),
         count(lit(1)).as("n_terms_hit"))
+  }
+
+  /** One matched term's Okapi BM25 contribution, `idf · tfNorm`, over the
+    * `tf` and `df` columns in scope — the one Column both Spark paths sum
+    * ([[bm25Score]] with literal corpus stats, [[TextPipeline.bm25TopK]]
+    * with its cross-joined `n`/`avgdl` columns), so their arithmetic
+    * cannot drift apart. The served path's scalar twin is
+    * `ServedUserView.scoreByKeys`. */
+  private[operators] def okapiTerm(n: Column, avgdl: Column, dl: Column,
+      k1: Double, b: Double): Column = {
+    val idf = log(lit(1.0) + (n - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+    val tfNorm = col("tf") * (lit(k1) + 1.0) /
+      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * dl / avgdl))
+    idf * tfNorm
   }
 
   /** Maximal Marginal Relevance reranking (Carbonell & Goldstein,

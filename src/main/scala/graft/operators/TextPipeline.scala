@@ -391,13 +391,11 @@ object TextPipeline {
         col("tc.tf").cast("double").as("tf"))
     val stats = base.agg(count(lit(1)).cast("double").as("n"), avg(col("dl")).as("avgdl"))
     val dfq = tf.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val idf = log(lit(1.0) + (col("n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-    val tfNorm = col("tf") * (lit(k1) + 1.0) /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
     val scored = tf.join(broadcast(dfq), Seq("term"))
       .crossJoin(broadcast(stats))
       .groupBy("id")
-      .agg(round(sum(idf * tfNorm), 4).as("score"),
+      .agg(round(sum(Search.okapiTerm(col("n"), col("avgdl"), col("dl"), k1, b)), 4)
+          .as("score"),
         count(lit(1)).as("n_terms_hit"))
     exclude.map(e => scored.filter(col("id") =!= e)).getOrElse(scored)
       .orderBy(col("score").desc, col("id").asc)

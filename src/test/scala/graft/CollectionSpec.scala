@@ -639,6 +639,18 @@ class CollectionSpec extends SparkSuite {
     assert(serveJobs <= 5L, s"serveUser ran $serveJobs Spark jobs")
     assert(view.search(Array(2.4, 3.4, 4.4, 5.4), k = 2, nprobe = 10).map(_._1) ===
       Seq(4L, 3L))
+    // one unflushed batch: the tail is served as one more segment, built
+    // from the one collect of its rows (postings included) — the five
+    // collects above plus that one, as when the tail was served raw
+    coll.insert(Seq((0L, 1000L, Seq(-5.0, -5.0, -5.0, -5.0), "tail doc running"))
+      .toDF("user_id", "doc_id", "vector", "content"))
+    coll.serveUser(0L)
+    val (tailView, tailJobs) = jobsDuring(coll.serveUser(0L))
+    assert(tailJobs <= 6L, s"serveUser with a tail ran $tailJobs Spark jobs")
+    assert(tailView.search(Array(-5.0, -5.0, -5.0, -5.0), k = 1, nprobe = 10)
+      .map(_._1) === Seq(1000L))
+    assert(tailView.termSearch(DocFilter.Contains("content", "running"), 10) ===
+      Seq(1L, 2L, 1000L))
   }
 
   test("segment relation cache: expiry drops dead segments; reopen answers identically") {

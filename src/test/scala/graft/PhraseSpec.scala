@@ -1170,4 +1170,107 @@ class PhraseSpec extends SparkSuite {
       assert(s === d, s"served hybrid parity for $filt")
     }
   }
+
+  test("tail served as a segment: every served surface answers alike before and after flush") {
+    // the unflushed tail is served as one more in-memory segment, so
+    // flushing the same rows must change no served answer
+    val base = Files.createTempDirectory("graft_tail_seg").toString
+    val coll = Collection.create(spark, base, CollectionConfig(
+      name = "ts", numFeatures = 2, initialNumCentroids = 2,
+      attributeSchema = Seq(AttrField("content", "text", "english"),
+        AttrField("tag", "keyword"), AttrField("score", "long"),
+        AttrField("price", "double")))) // no row carries price
+    def batch(rows: (Long, Seq[Double], Option[String], String, Option[Long])*) =
+      rows.map { case (id, v, c, t, s) => (0L, id, v, c, t, s) }
+        .toDF("user_id", "doc_id", "vector", "content", "tag", "score")
+    coll.insert(batch(
+      (1L, Seq(1.0, 0.0), Some("the quick brown fox jumps"), "Red", Some(10L)),
+      (2L, Seq(0.9, 0.1), Some("quick quick running dogs"), "blue", Some(20L)),
+      (3L, Seq(0.0, 1.0), Some("brown dogs sleep all day"), "red", None),
+      (4L, Seq(0.5, 0.5), Some("foxes running in the brown forest"), "green", Some(40L)),
+      (5L, Seq(0.2, 0.8), Some(""), "blue", Some(50L)),
+      (6L, Seq(0.7, 0.3), None, "Red", Some(60L))))
+    // doc 2 gets a newer version (newest-wins); doc 4 is deleted, then
+    // re-inserted (live again); doc 7 is new
+    coll.insert(batch((2L, Seq(0.95, 0.05), Some("lazy brown fox"), "red", Some(25L))))
+    coll.delete(Seq((0L, 4L)).toDF("user_id", "doc_id"))
+    coll.insert(batch(
+      (4L, Seq(0.45, 0.55), Some("brown fox returns running"), "green", Some(45L)),
+      (7L, Seq(0.6, 0.4), Some("quick brown dogs running"), "Blue", Some(30L))))
+    val filters = Seq(
+      DocFilter.Contains("content", "brown"),
+      DocFilter.Contains("content", "brown fox"),
+      DocFilter.Contains("tag", "RED"),
+      DocFilter.NotContains("content", "quick"),
+      DocFilter.Phrase("content", "brown fox"),
+      DocFilter.Phrase("content", "quick quick"),
+      DocFilter.Phrase("tag", "red"),
+      DocFilter.Near("content", "quick", "dogs", 2),
+      DocFilter.Prefix("content", "run"),
+      DocFilter.Prefix("tag", "bl"),
+      DocFilter.Fuzzy("content", "browm", 1),
+      DocFilter.Fuzzy("tag", "gren", 1),
+      DocFilter.Wildcard("content", "d?g"),
+      DocFilter.Wildcard("tag", "r*"),
+      DocFilter.Regex("content", "fox(es)?"),
+      DocFilter.Regex("tag", "gr.*"),
+      DocFilter.Range("score", Some(15.0), Some(45.0)),
+      DocFilter.And(Nil),
+      DocFilter.Or(Nil),
+      DocFilter.And(Seq(DocFilter.Contains("content", "brown"),
+        DocFilter.Range("score", gte = Some(20.0)))),
+      DocFilter.Or(Seq(DocFilter.Phrase("content", "lazy brown"),
+        DocFilter.Prefix("tag", "gr"))))
+    val q = Array(0.8, 0.2)
+    val fields = Seq("content" -> 1.0, "tag" -> 0.5)
+    val buckets = Seq((0.0, 30.0), (30.0, 100.0), (20.0, 50.0))
+    def answers(v: graft.core.ServedUserView): Seq[Any] = Seq(
+      v.search(q, 4, 100),
+      v.search(q, 4, 0), // no probe: nothing, flushed or not
+      v.termStats(), v.termStats("content:b"),
+      v.suggest("content", "brwn"), v.suggest("tag", "rd"),
+      v.rankedSearch("content", "brown fox running", 5),
+      v.rankedSearch("tag", "red", 5),
+      v.rankedSearchFields(fields, "brown red", 5),
+      v.hybridSearch("content", "quick brown", q, k = 3, nprobe = 100, window = 5),
+      v.moreLikeThis("content", 7L, m = 3, k = 5),
+      v.moreLikeThis("content", 2L, m = 3, k = 5)) ++
+      filters.flatMap { f => Seq(
+        v.search(q, 4, 100, Some(f)), v.termSearch(f, 10),
+        v.facetCounts(f, "tag"), v.facetRanges(f, "score", buckets),
+        v.rankedSearch("content", "brown", 5, filter = Some(f)),
+        v.rankedSearchFields(fields, "brown red", 5, filter = Some(f)),
+        v.hybridSearch("content", "quick brown", q, k = 3, nprobe = 100,
+          window = 5, filter = Some(f)),
+        v.moreLikeThis("content", 7L, m = 3, k = 5, filter = Some(f)))
+      }
+    val tailOnly = coll.serveUser(0L)
+    assert(coll.toc.segments.isEmpty)
+    // the answers are not trivially empty
+    assert(tailOnly.termSearch(DocFilter.Contains("content", "brown"), 10) ===
+      Seq(1L, 2L, 3L, 4L, 7L))
+    assert(tailOnly.search(q, 3, 100).size === 3)
+    // point ids are assigned at flush: Ids matches no tail row
+    val ids = DocFilter.Ids(Seq(0L, 1L, 2L, 3L))
+    assert(tailOnly.termSearch(ids, 10).isEmpty)
+    assert(tailOnly.search(q, 4, 100, Some(ids)).isEmpty)
+    // a Range over a declared numeric field no tail row carries matches
+    // nothing, and is not refused
+    val price = DocFilter.Range("price", gte = Some(0.0))
+    assert(tailOnly.termSearch(price, 10).isEmpty)
+    assert(tailOnly.search(q, 4, 100, Some(price)).isEmpty)
+    val before = answers(tailOnly)
+    coll.flush()
+    assert(coll.toc.segments.size === 1)
+    val flushed = coll.serveUser(0L)
+    val after = answers(flushed)
+    assert(after.size === before.size)
+    for (((b, a), i) <- before.zip(after).zipWithIndex)
+      assert(a === b, s"served answer $i changed across the flush")
+    // once flushed, the same rows carry real point ids
+    assert(flushed.termSearch(ids, 10).nonEmpty)
+    // and the flushed segment lacks the price column: refused, naming it
+    val e = intercept[IllegalArgumentException](flushed.termSearch(price, 10))
+    assert(e.getMessage.contains(coll.toc.segments.head))
+  }
 }
