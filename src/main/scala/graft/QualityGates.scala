@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
-import graft.operators.{Ann, Dedup, Pca, ProductQuantizer, RaBitQ}
+import graft.operators.{Ann, Dedup, Pca, ProductQuantizer, Quantizer, RaBitQ}
 
 /** Driver-visible quality gates for the queries the DuckDB oracle cannot
   * express (LSH candidate generation, ANN, PQ, connected components).
@@ -112,7 +112,7 @@ object QualityGates {
       val recalls = queries.map { case (_, q) =>
         val oracle = Ann.bruteForceTopK(emb, q, 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
-        val got = ProductQuantizer.topK(encoded, model, q, k = 10, rerank = 100)
+        val got = Quantizer.rerankTopK(encoded, Quantizer.PqCodec.estimate(model, q), q, k = 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
         oracle.intersect(got).size / 10.0
       }
@@ -155,7 +155,7 @@ object QualityGates {
       val recalls = queries.map { case (_, q) =>
         val oracle = Ann.bruteForceTopK(emb, q, 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
-        val got = graft.operators.ScalarQuantizer.topK(encoded, model, q, k = 10, rerank = 100)
+        val got = Quantizer.rerankTopK(encoded, Quantizer.Sq8Codec.estimate(model, q), q, k = 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
         oracle.intersect(got).size / 10.0
       }
@@ -177,7 +177,7 @@ object QualityGates {
       val recalls = queries.map { case (_, q) =>
         val oracle = Ann.bruteForceTopK(emb, q, 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
-        val got = RaBitQ.topK(encoded, model, q, k = 10, rerank = 100)
+        val got = Quantizer.rerankTopK(encoded, Quantizer.RabitqCodec.estimate(model, q), q, k = 10)
           .select("vec_id").collect().map(_.getLong(0)).toSet
         oracle.intersect(got).size / 10.0
       }

@@ -159,8 +159,9 @@ object SparkEntry {
   /** Java-serialize a trained quantizer model next to its stamped
     * artifacts so a stamp hit reuses it without retraining — the same
     * Serializable model classes `Collection.flush` persists per segment
-    * (writeModel/readPqModel). Only ever called inside a [[stampedBuild]]
-    * block, so the (de)serialization cost rides the artifact split. */
+    * (`Quantizer.Codec.modelFile`). Only ever called inside a
+    * [[stampedBuild]] block, so the (de)serialization cost rides the
+    * artifact split. */
   private def writeObj(path: String, m: AnyRef): Unit = {
     val p = java.nio.file.Paths.get(path)
     java.nio.file.Files.createDirectories(p.getParent)
@@ -840,8 +841,8 @@ object SparkEntry {
           .repartition(4).saveArtifact(cdArt)
       }
       val model = readObj[ProductQuantizer.Model](s"$mBase/model.bin")
-      ProductQuantizer.topK(s.read.parquet(cdArt), model, q0(s, d),
-        k = 10, rerank = 100)
+      Quantizer.rerankTopK(s.read.parquet(cdArt),
+        Quantizer.PqCodec.estimate(model, q0(s, d)), q0(s, d), k = 10)
         .select(col("vec_id"), round(col("dist"), 4).as("dist"))
     }),
     // RaBitQ ANN with a FULL SQL replay (q35's artifact pattern): the
@@ -874,7 +875,8 @@ object SparkEntry {
           .repartition(4).saveArtifact(cdArt)
       }
       val model = readObj[RaBitQ.Model](s"$mBase/model.bin")
-      RaBitQ.topK(s.read.parquet(cdArt), model, q0(s, d), k = 10, rerank = 100)
+      Quantizer.rerankTopK(s.read.parquet(cdArt),
+        Quantizer.RabitqCodec.estimate(model, q0(s, d)), q0(s, d), k = 10)
         .select(col("vec_id"), round(col("dist"), 4).as("dist"))
     }),
     // OPQ ANN with a FULL SQL replay (q35's artifact pattern, rotated):
@@ -912,7 +914,8 @@ object SparkEntry {
           .repartition(4).saveArtifact(cdArt)
       }
       val model = readObj[Opq.Model](s"$mBase/model.bin")
-      Opq.topK(s.read.parquet(cdArt), model, q0(s, d), k = 10, rerank = 100)
+      Quantizer.rerankTopK(s.read.parquet(cdArt),
+        Quantizer.OpqCodec.estimate(model, q0(s, d)), q0(s, d), k = 10)
         .select(col("vec_id"), round(col("dist"), 4).as("dist"))
     }),
     "q42_decontaminate" -> ((s, d) => {
@@ -1429,8 +1432,8 @@ object SparkEntry {
           .repartition(4).saveArtifact(cdArt)
       }
       val model = readObj[ScalarQuantizer.Model](s"$mBase/model.bin")
-      ScalarQuantizer.topK(s.read.parquet(cdArt), model, q0(s, d),
-        k = 10, rerank = 100)
+      Quantizer.rerankTopK(s.read.parquet(cdArt),
+        Quantizer.Sq8Codec.estimate(model, q0(s, d)), q0(s, d), k = 10)
         .select(col("vec_id"), round(col("dist"), 4).as("dist"))
     }),
     // T5-style span corruption (denoising-objective data prep). The

@@ -4,12 +4,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.GraftFunctions._
-import graft.operators.{Ann, DocFilter, IvfBuilder, Search, SearchParams}
+import graft.operators.{Ann, DocFilter, IvfBuilder, Quantizer, Search, SearchParams}
 
 /** Collection configuration — mirrors the served fields of the reference's
   * `CollectionConfig` (rs/config/src/collection.rs:9-152; defaults
@@ -61,7 +61,7 @@ final case class CollectionConfig(
       * thousands. */
     assignProbeGroups: Int = 0,
     attributeSchema: Seq[AttrField] = Nil) {
-  require(Seq("noq", "pq", "opq", "rabitq", "sq8").contains(quantizer),
+  require(quantizer == "noq" || Quantizer.codecs.contains(quantizer),
     s"unknown quantizer: $quantizer")
   require(centroidIndexType == "exact" || centroidIndexType == "hnsw",
     s"unknown centroidIndexType: $centroidIndexType")
@@ -379,37 +379,23 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     Files.writeString(markerDir.resolve("_TOMB_DONE"), "")
   }
 
-  /** Per-segment quantizer model blob (java serialization — the models
-    * are small driver-side case classes; one file per segment beside its
-    * parquet tables). One reader/writer pair serves every quantizer. */
-  private def readModel[T](seg: String, file: String): Option[T] = {
-    val p = Paths.get(segPath(seg), file)
-    if (!Files.exists(p)) None
-    else {
-      val ois = new java.io.ObjectInputStream(Files.newInputStream(p))
-      try Some(ois.readObject().asInstanceOf[T])
-      finally ois.close()
+  /** The configured quantizer's codec; None for "noq". */
+  private val quantizer: Option[Quantizer.Codec] = Quantizer.codecs.get(config.quantizer)
+
+  /** A segment's quantized distance estimate for a query — its codec's
+    * `estimate` over the model persisted beside its tables (java
+    * serialization, `Codec.modelFile`). None for "noq" or when the model
+    * file is absent; search then ranks on the exact distance alone. */
+  def codec(seg: String): Option[Seq[Double] => Column] =
+    quantizer.flatMap { q =>
+      val p = Paths.get(segPath(seg), q.modelFile)
+      if (!Files.exists(p)) None
+      else {
+        val ois = new java.io.ObjectInputStream(Files.newInputStream(p))
+        val m = try ois.readObject().asInstanceOf[q.Model] finally ois.close()
+        Some((query: Seq[Double]) => q.estimate(m, query))
+      }
     }
-  }
-
-  private[core] def writeModel(seg: String, file: String, m: AnyRef): Unit = {
-    Files.createDirectories(Paths.get(segPath(seg)))
-    val oos = new java.io.ObjectOutputStream(
-      Files.newOutputStream(Paths.get(segPath(seg), file)))
-    try oos.writeObject(m) finally oos.close()
-  }
-
-  def readPqModel(seg: String): Option[graft.operators.ProductQuantizer.Model] =
-    readModel(seg, "pq_model.bin")
-
-  def readOpqModel(seg: String): Option[graft.operators.Opq.Model] =
-    readModel(seg, "opq_model.bin")
-
-  def readRabitqModel(seg: String): Option[graft.operators.RaBitQ.Model] =
-    readModel(seg, "rabitq_model.bin")
-
-  def readSqModel(seg: String): Option[graft.operators.ScalarQuantizer.Model] =
-    readModel(seg, "sq_model.bin")
 
   private def readBloom(seg: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
     val p = Paths.get(segPath(seg), "bloom.bin")
@@ -605,51 +591,19 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       .withColumn("user_bucket", userBucket(col("user_id")))
       .withColumn("point_id", row_number().over(w))
 
-    // PQ quantizer: train a per-segment codebook, persist it, and store
-    // byte codes alongside (V3; rs/quantization/src/pq/pq_builder.rs).
-    // Quantizer training needs only the vector column — it samples `rows`
-    // directly, so the bounded training collect never recomputes the
-    // point-id window.
-    if (config.quantizer == "pq") {
-      val model = graft.operators.ProductQuantizer.train(
-        rows, "vector", config.pqSubvectors, config.pqBits,
-        sampleSize = config.clusteringSample)
-      writeModel(seg, "pq_model.bin", model)
-      vectors = vectors.withColumn("pq_codes",
-        graft.operators.ProductQuantizer.encodeCol(model, col("vector")))
-    }
-    // OPQ quantizer (beyond the reference): PQ codes in a learned
-    // orthogonal rotation — same storage shape as PQ (byte codes + a
-    // per-segment model blob), strictly-no-worse reconstruction by
-    // construction (operators/Opq.scala).
-    if (config.quantizer == "opq") {
-      val model = graft.operators.Opq.train(
-        rows, "vector", config.pqSubvectors, config.pqBits,
-        sampleSize = config.clusteringSample)
-      writeModel(seg, "opq_model.bin", model)
-      vectors = vectors.withColumn("opq_codes",
-        graft.operators.Opq.encodeCol(model, col("vector")))
-    }
-    // RaBitQ quantizer: sign-bit codes + per-vector factor/norm (V6;
-    // rs/quantization/src/rabitq/, unwired in the reference's server).
-    if (config.quantizer == "rabitq") {
-      val model = graft.operators.RaBitQ.train(
-        rows, "vector", sampleSize = config.clusteringSample)
-      writeModel(seg, "rabitq_model.bin", model)
-      vectors = vectors
-        .withColumn("rq", graft.operators.RaBitQ.encodeCols(model, col("vector")))
-        .withColumn("rq_code", col("rq._1"))
-        .withColumn("rq_f", col("rq._2"))
-        .withColumn("rq_norm", col("rq._3"))
-        .drop("rq")
-    }
-    // SQ8 quantizer: exact per-dim ranges + 1-byte codes (V-family;
-    // the scalar sibling of PQ with trivial training).
-    if (config.quantizer == "sq8") {
-      val model = graft.operators.ScalarQuantizer.train(rows, "vector")
-      writeModel(seg, "sq_model.bin", model)
-      vectors = vectors.withColumn("sq_codes",
-        graft.operators.ScalarQuantizer.encodeCol(model, col("vector")))
+    // Quantizer: train the per-segment model, persist it beside the
+    // segment's tables, and store the codes in the vectors table
+    // (operators/Quantizer.scala). Training needs only the vector column
+    // — it samples `rows` directly, so the bounded training collect never
+    // recomputes the point-id window.
+    for (q <- quantizer) {
+      val model = q.train(rows, config)
+      Files.createDirectories(Paths.get(segPath(seg)))
+      val oos = new java.io.ObjectOutputStream(
+        Files.newOutputStream(Paths.get(segPath(seg), q.modelFile)))
+      try oos.writeObject(model) finally oos.close()
+      vectors = q.codes.foldLeft(vectors.withColumn("_codes", q.encode(model, col("vector"))))(
+        (df, c) => df.withColumn(c, col(s"_codes.$c"))).drop("_codes")
     }
     // Full rows (attrs included) persist in the vectors table so merge /
     // vacuum can rebuild the term index without a separate attrs store.
@@ -753,10 +707,8 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
         vectors.select(col("user_id"), lit("").as("term"), col("point_id"),
           array().cast("array<int>").as("positions")).limit(0)
       else textCols.map { f =>
-        val toks =
-          if (f.kind == "keyword") array(lower(col(f.name)))
-          else analyze_text(col(f.name), lit(f.lang))
-        graft.operators.Gen.explodeOnce(vectors.withColumn("_toks", toks),
+        graft.operators.Gen.explodeOnce(
+          vectors.withColumn("_toks", Collection.fieldTokens(f.name, f.kind == "keyword", f.lang)),
           Seq(col("user_id"), col("point_id")),
           term_postings(f.name, col("_toks")), "tp")
           .select(col("user_id"), col("tp.term").as("term"), col("point_id"),
@@ -791,11 +743,8 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     // positions column per query; segments flushed before this table
     // landed fall back to that derivation (the segment record's hasLens).
     if (textCols.nonEmpty) textCols.map { f =>
-      val toks =
-        if (f.kind == "keyword") array(lower(col(f.name)))
-        else analyze_text(col(f.name), lit(f.lang))
       vectors.select(col("user_id"), col("point_id"), lit(f.name).as("field"),
-        coalesce(size(toks), lit(0)).cast("long").as("dl"))
+        size(Collection.fieldTokens(f.name, f.kind == "keyword", f.lang)).cast("long").as("dl"))
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"${segPath(seg)}/lens")
   }
@@ -1437,7 +1386,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       segments: Seq[String]): Unit = {
     var rows = victims.map { s =>
       segment(s).vectors
-        .drop("point_id", "user_bucket", "pq_codes", "rq_code", "rq_f", "rq_norm")
+        .drop(Seq("point_id", "user_bucket") ++ Quantizer.codecs.values.flatMap(_.codes): _*)
     // allowMissingColumns: segments flushed before an attribute was
     // added lack its column — the rebuild fills nulls (which never
     // match a Range), making merge() the schema-evolution upgrade the
@@ -1675,6 +1624,16 @@ object Collection {
   /** Term-hash partition count for segment term indexes (fixed so readers
     * can recompute the bucket of a query term without segment metadata). */
   val termBuckets: Long = 64L
+
+  /** A text field's analyzed tokens: one lowercased token for a keyword
+    * value, the stemmed tokens (`lang`) for a text value, and none for a
+    * null value. The one analysis the flush (terms and lens), the Spark
+    * tail reads and filters, and the served tail all index a value with,
+    * so a doc holding a null value has no term, dl 0, and matches every
+    * NotContains on every path. */
+  private[core] def fieldTokens(field: String, keyword: Boolean, lang: String): Column =
+    when(col(field).isNull, array().cast("array<string>"))
+      .otherwise(if (keyword) array(lower(col(field))) else analyze_text(col(field), lit(lang)))
 
   def create(spark: SparkSession, base: String, config: CollectionConfig): Collection = {
     val p = s"$base/${config.name}"
@@ -2006,34 +1965,12 @@ final class Snapshot(
             filterPoints = Some(f), tombstones = tombRows))
         }
       adaptiveBrute.getOrElse {
-      (coll.config.quantizer match {
-        case "pq" => coll.readPqModel(seg).map(m => (df: DataFrame) =>
-          Search.spannAdc(df,
-            coll.segment(seg).centroids,
-            coll.segment(seg).postings,
-            m, query, params, userIds, fp, tombRows))
-        case "opq" => coll.readOpqModel(seg).map(m => (df: DataFrame) =>
-          Search.spannOpq(df,
-            coll.segment(seg).centroids,
-            coll.segment(seg).postings,
-            m, query, params, userIds, fp, tombRows))
-        case "rabitq" => coll.readRabitqModel(seg).map(m => (df: DataFrame) =>
-          Search.spannRabitq(df,
-            coll.segment(seg).centroids,
-            coll.segment(seg).postings,
-            m, query, params, userIds, fp, tombRows))
-        case "sq8" => coll.readSqModel(seg).map(m => (df: DataFrame) =>
-          Search.spannSq8(df,
-            coll.segment(seg).centroids,
-            coll.segment(seg).postings,
-            m, query, params, userIds, fp, tombRows))
-        case _ => None
-      }).getOrElse((df: DataFrame) =>
-        Search.spann(df,
+        Search.spann(
+          coll.vectorsFor(seg, userIds), // bucket-pruned scan for named users
           coll.segment(seg).centroids,
           coll.segment(seg).postings,
-          query, params, userIds, fp, tombRows))
-        .apply(coll.vectorsFor(seg, userIds)) // bucket-pruned scan for named users
+          query, params, userIds, fp, tombRows,
+          estimate = coll.codec(seg).map(_(query)))
       }
     }
     val tailResult = tailRows.map { rows =>
@@ -2407,7 +2344,7 @@ final class Snapshot(
     * terms). */
   private def liveTermDocs(restrict: DataFrame => DataFrame,
       userIds: Seq[Any]): Option[DataFrame] = {
-    import graft.functions.GraftFunctions.{analyze_text, term_keys}
+    import graft.functions.GraftFunctions.term_keys
     val perSegment = segments.map { seg =>
       val ids = coll.vectorsFor(seg, userIds)
         .select("user_id", "point_id", "doc_id", "src_batch")
@@ -2427,10 +2364,8 @@ final class Snapshot(
         if (userIds.nonEmpty) df = df.filter(col("user_id").isin(userIds: _*))
         for (tb <- tombRows) df = Search.dropTombstoned(df, tb)
         Some(restrict(textCols.map { f =>
-          val toks =
-            if (f.kind == "keyword") array(lower(col(f.name)))
-            else analyze_text(col(f.name), lit(f.lang))
-          graft.operators.Gen.explodeOnce(df.withColumn("_toks", toks),
+          graft.operators.Gen.explodeOnce(
+            df.withColumn("_toks", Collection.fieldTokens(f.name, f.kind == "keyword", f.lang)),
             Seq(col("user_id"), col("doc_id"), col("src_batch")),
             term_keys(f.name, col("_toks")), "term")
             .select(col("user_id"), col("term"), col("doc_id"), col("src_batch"))
@@ -2490,11 +2425,8 @@ final class Snapshot(
           var df = rows
           if (userIds.nonEmpty) df = df.filter(col("user_id").isin(userIds: _*))
           for (tb <- tombRows) df = Search.dropTombstoned(df, tb)
-          val toks =
-            if (f.kind == "keyword") array(lower(col(f.name)))
-            else analyze_text(col(f.name), lit(f.lang))
           restrict(graft.operators.Gen.explodeOnce(
-            df.withColumn("_toks", toks),
+            df.withColumn("_toks", Collection.fieldTokens(f.name, f.kind == "keyword", f.lang)),
             Seq(col("user_id"), col("doc_id"), col("src_batch")),
             term_postings(f.name, col("_toks")), "tp")
             .select(col("user_id"), col("tp.term").as("term"), col("doc_id"),
@@ -2547,11 +2479,9 @@ final class Snapshot(
           var df = rows
           if (userIds.nonEmpty) df = df.filter(col("user_id").isin(userIds: _*))
           for (tb <- tombRows) df = Search.dropTombstoned(df, tb)
-          val toks =
-            if (f.kind == "keyword") array(lower(col(f.name)))
-            else analyze_text(col(f.name), lit(f.lang))
           df.select(col("user_id"), col("doc_id"),
-            coalesce(size(toks), lit(0)).cast("long").as("dl"), col("src_batch"))
+            size(Collection.fieldTokens(f.name, f.kind == "keyword", f.lang)).cast("long").as("dl"),
+            col("src_batch"))
         }
     }
     (perSegment ++ tailLens).reduceOption(_ unionByName _)
@@ -2975,9 +2905,7 @@ final class Snapshot(
     case DocFilter.Ids(_) => lit(false)
     case DocFilter.Contains(field, value, kw) =>
       val lang = coll.config.attributeSchema.find(_.name == field).map(_.lang).getOrElse("english")
-      val docToks =
-        if (kw) array(lower(col(field)))
-        else analyze_text(col(field), lit(lang))
+      val docToks = Collection.fieldTokens(field, kw, lang)
       val qts = graft.operators.FilterCompiler.queryTerms(field, value, kw, lang)
         .map(_.stripPrefix(s"$field:"))
       if (qts.isEmpty) lit(false)
@@ -2989,9 +2917,7 @@ final class Snapshot(
       // when() guard keeps the descending-sequence/0-index hazards of
       // short documents out (CaseWhen branches evaluate lazily per row)
       val lang = coll.config.attributeSchema.find(_.name == field).map(_.lang).getOrElse("english")
-      val docToks =
-        if (kw) array(lower(col(field)))
-        else analyze_text(col(field), lit(lang))
+      val docToks = Collection.fieldTokens(field, kw, lang)
       val qts = graft.operators.FilterCompiler.queryTerms(field, value, kw, lang)
         .map(_.stripPrefix(s"$field:"))
       if (qts.isEmpty) lit(false)
@@ -3011,7 +2937,7 @@ final class Snapshot(
       }
     case DocFilter.Near(field, l, r, w) =>
       val lang = coll.config.attributeSchema.find(_.name == field).map(_.lang).getOrElse("english")
-      val docToks = analyze_text(col(field), lit(lang))
+      val docToks = Collection.fieldTokens(field, keyword = false, lang)
       val lt = graft.operators.FilterCompiler.queryTerms(field, l, keyword = false, lang)
         .map(_.stripPrefix(s"$field:"))
       val rt = graft.operators.FilterCompiler.queryTerms(field, r, keyword = false, lang)
@@ -3029,15 +2955,11 @@ final class Snapshot(
       // UNanalyzed (lowercase only), matched against the same analyzed
       // tokens the index side would store
       val lang = coll.config.attributeSchema.find(_.name == field).map(_.lang).getOrElse("english")
-      val docToks =
-        if (kw) array(lower(col(field)))
-        else analyze_text(col(field), lit(lang))
+      val docToks = Collection.fieldTokens(field, kw, lang)
       exists(docToks, t => t.startsWith(value.trim.toLowerCase))
     case DocFilter.Fuzzy(field, value, d, kw, pl) =>
       val lang = coll.config.attributeSchema.find(_.name == field).map(_.lang).getOrElse("english")
-      val docToks =
-        if (kw) array(lower(col(field)))
-        else analyze_text(col(field), lit(lang))
+      val docToks = Collection.fieldTokens(field, kw, lang)
       val qts = graft.operators.FilterCompiler.queryTerms(field, value, kw, lang)
         .map(_.stripPrefix(s"$field:"))
       if (qts.isEmpty) lit(false)
@@ -3047,9 +2969,7 @@ final class Snapshot(
       compileRaw(DocFilter.Regex(field, DocFilter.wildcardToRegex(pat), kw), df)
     case DocFilter.Regex(field, pat, kw) =>
       val lang = coll.config.attributeSchema.find(_.name == field).map(_.lang).getOrElse("english")
-      val docToks =
-        if (kw) array(lower(col(field)))
-        else analyze_text(col(field), lit(lang))
+      val docToks = Collection.fieldTokens(field, kw, lang)
       exists(docToks, t => t.rlike(s"^(?:$pat)$$"))
     case DocFilter.Range(field, lo, hi) =>
       if (!df.columns.contains(field)) lit(false)

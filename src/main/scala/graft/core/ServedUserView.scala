@@ -785,18 +785,16 @@ object ServedUserView {
     }
     // The unflushed tail as one more segment view (the reference's mutable
     // segment, mutable_segment.rs:73-103). Its postings come out of the
-    // same collect, built by the flush's own expressions (buildSegment's
-    // per-field token arrays, materialized once per row, then
+    // same collect, built by the flush's own expressions (the per-field
+    // `Collection.fieldTokens` arrays, materialized once per row, then
     // term_postings), so the index/query analyzer symmetry holds without
     // re-implementing the stemmers and the view answers as the flushed
     // segment will.
     val tail = coll.tailFor(t).map { rows0 =>
-      import graft.functions.GraftFunctions.{analyze_text, term_postings}
+      import graft.functions.GraftFunctions.term_postings
       val present = coll.config.textFields.filter(f => rows0.columns.contains(f.name))
-      val df = userRows(rows0).select(col("*") +: present.map { f =>
-        (if (f.kind == "keyword") array(lower(col(f.name)))
-         else analyze_text(col(f.name), lit(f.lang))).as(s"__toks_${f.name}")
-      }: _*)
+      val df = userRows(rows0).select(col("*") +: present.map(f =>
+        Collection.fieldTokens(f.name, f.kind == "keyword", f.lang).as(s"__toks_${f.name}")): _*)
       val (collected, attrs) = collectRows(df, lit(0L), numFieldNames,
         present.map(f => term_postings(f.name, col(s"__toks_${f.name}"))))
       // synthetic point ids in doc_id order, so the index's per-view top-k
@@ -804,9 +802,8 @@ object ServedUserView {
       val rows = collected.sortWith((a, b) => idLess(a.get(1), b.get(1)))
         .zipWithIndex.map { case (r, i) => Row.fromSeq(i.toLong +: r.toSeq.tail) }
       val base = 4 + numFieldNames.size + attrs.size
-      // a null value has no terms (a keyword field's null token)
       val termPostings = (for (r <- rows; j <- present.indices;
-          tp <- Option(r.getSeq[Row](base + j)).getOrElse(Nil) if !tp.isNullAt(0))
+          tp <- r.getSeq[Row](base + j))
         yield (tp.getString(0), (r.getLong(0), tp.getSeq[Int](1).toArray)))
         .groupBy(_._1).map { case (term, ps) => term -> ps.map(_._2) }
       // one zero centroid holding every point: a probe is an exact scan,

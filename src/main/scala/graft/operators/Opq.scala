@@ -222,22 +222,6 @@ object Opq {
       ColumnBridge.expression(codesCol), ColumnBridge.expression(lutLit)))
   }
 
-  /** OPQ-accelerated top-k with exact re-ranking (PQ's pipeline). */
-  def topK(
-      encoded: DataFrame, model: Model, query: Seq[Double], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      codesCol: String = "opq_codes", rerank: Int = 100): DataFrame = {
-    import graft.functions.GraftFunctions.{l2_distance, vec}
-    encoded
-      .withColumn("adc", adcDistance(model, col(codesCol), query))
-      .orderBy(col("adc").asc, col(idCol).asc)
-      .limit(math.max(k, rerank))
-      .withColumn("dist", l2_distance(col(vecCol), vec(query)))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("dist"))
-  }
-
   // ---- driver-side dense linear algebra (sample-bounded) ----
 
   private def identity(d: Int): Array[Array[Double]] =

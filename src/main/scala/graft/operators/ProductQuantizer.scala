@@ -118,22 +118,4 @@ object ProductQuantizer {
     ColumnBridge.column(PqAdcDistance(
       ColumnBridge.expression(codesCol), ColumnBridge.expression(lutLit)))
   }
-
-  /** PQ-accelerated top-k with exact re-ranking: ADC-rank all rows,
-    * keep `rerank` candidates, re-score them exactly. Standard recall
-    * recovery for quantization error. */
-  def topK(
-      encoded: DataFrame, model: Model, query: Seq[Double], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      codesCol: String = "pq_codes", rerank: Int = 100): DataFrame = {
-    import graft.functions.GraftFunctions.{l2_distance, vec}
-    encoded
-      .withColumn("adc", adcDistance(model, col(codesCol), query))
-      .orderBy(col("adc").asc, col(idCol).asc)
-      .limit(math.max(k, rerank))
-      .withColumn("dist", l2_distance(col(vecCol), vec(query)))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("dist"))
-  }
 }

@@ -166,21 +166,4 @@ object RaBitQ {
       normCol * normCol + lit(qnorm * qnorm) - lit(2.0 * qnorm) * normCol * cosEst,
       lit(0.0)))
   }
-
-  /** RaBitQ-accelerated top-k with exact re-ranking. */
-  def topK(
-      encoded: DataFrame, model: Model, query: Seq[Double], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rerank: Int = 100): DataFrame = {
-    import graft.functions.GraftFunctions.{l2_distance, vec}
-    encoded
-      .withColumn("est", estDistance(
-        model, col("rq_code"), col("rq_f"), col("rq_norm"), query))
-      .orderBy(col("est").asc, col(idCol).asc)
-      .limit(math.max(k, rerank))
-      .withColumn("dist", l2_distance(col(vecCol), vec(query)))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("dist"))
-  }
 }

@@ -81,21 +81,4 @@ object ScalarQuantizer {
     ColumnBridge.column(Sq8L2Distance(
       ColumnBridge.expression(codesCol), qAdj, model.scales))
   }
-
-  /** Estimate-rank on codes, exact re-rank of `rerank` candidates —
-    * the PQ search pattern (both stages TakeOrderedAndProject). */
-  def topK(
-      encoded: DataFrame, model: Model, query: Seq[Double], k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      codesCol: String = "sq_codes", rerank: Int = 100): DataFrame = {
-    import graft.functions.GraftFunctions.{l2_distance, vec}
-    encoded
-      .withColumn("est", distanceCol(model, col(codesCol), query))
-      .orderBy(col("est").asc, col(idCol).asc)
-      .limit(math.max(k, rerank))
-      .withColumn("dist", l2_distance(col(vecCol), vec(query)))
-      .orderBy(col("dist").asc, col(idCol).asc)
-      .limit(k)
-      .select(col(idCol), col("dist"))
-  }
 }

@@ -153,7 +153,14 @@ object Search {
     * an exact scan: centroid cardinality is ~sqrt(N) and the scan is a
     * broadcast-size DataFrame, so exact beats approximate here (SURVEY
     * §2.5 K1). `nprobe >= |centroids|` degrades to exact search — used as
-    * the oracle knob in tests. */
+    * the oracle knob in tests.
+    *
+    * On a quantized segment `estimate` is its codec's distance estimate
+    * over the code columns `vectors` carries ([[Quantizer.Codec]]):
+    * candidates rank on it and only the best 100 are re-scored exactly
+    * ([[Quantizer.ranked]]) — the reference's served ProductQuantizerL2
+    * path (rs/index_server/src/collection_manager.rs:72-94) with the
+    * standard re-ranking recall guard on top. */
   def spann(
       vectors: DataFrame,
       centroids: DataFrame,
@@ -162,64 +169,13 @@ object Search {
       params: SearchParams = SearchParams(),
       userIds: Seq[Any] = Nil,
       filterPoints: Option[DataFrame] = None,
-      tombstones: Option[DataFrame] = None): DataFrame =
-    probeVectors(vectors, postings, chooseCentroids(centroids, query, params),
-        userIds, filterPoints, tombstones)
-      .withColumn("score", l2_distance(col("vector"), vec(query)))
-      .orderBy(scoreOrder: _*)
-      .limit(params.topK)
-      .select("user_id", "doc_id", "score")
-
-  /** SPANN search over a PQ-quantized segment (K2 + V4): identical probe
-    * pipeline, but candidates are first ranked by codegen ADC distance
-    * over their byte codes (one LUT per query) and only the best `rerank`
-    * are re-scored exactly — the reference's served ProductQuantizerL2
-    * path (rs/index_server/src/collection_manager.rs:72-94) with the
-    * standard re-ranking recall guard on top. */
-  def spannAdc(
-      vectors: DataFrame, // must carry pq_codes
-      centroids: DataFrame,
-      postings: DataFrame,
-      model: ProductQuantizer.Model,
-      query: Seq[Double],
-      params: SearchParams = SearchParams(),
-      userIds: Seq[Any] = Nil,
-      filterPoints: Option[DataFrame] = None,
       tombstones: Option[DataFrame] = None,
-      rerank: Int = 100): DataFrame =
-    probeVectors(vectors, postings, chooseCentroids(centroids, query, params),
-        userIds, filterPoints, tombstones)
-      .withColumn("adc", ProductQuantizer.adcDistance(model, col("pq_codes"), query))
-      .orderBy(col("adc").asc, col("doc_id").asc)
-      .limit(math.max(params.topK, rerank))
-      .withColumn("score", l2_distance(col("vector"), vec(query)))
-      .orderBy(scoreOrder: _*)
-      .limit(params.topK)
-      .select("user_id", "doc_id", "score")
-
-  /** SPANN search over an OPQ-quantized segment: [[spannAdc]]'s exact
-    * pipeline — the shared codegen ADC kernel ranks byte codes — with the
-    * LUT built from the ROTATED query (orthogonal rotation preserves L2,
-    * so the estimate targets the same distances; operators/Opq.scala). */
-  def spannOpq(
-      vectors: DataFrame, // must carry opq_codes
-      centroids: DataFrame,
-      postings: DataFrame,
-      model: Opq.Model,
-      query: Seq[Double],
-      params: SearchParams = SearchParams(),
-      userIds: Seq[Any] = Nil,
-      filterPoints: Option[DataFrame] = None,
-      tombstones: Option[DataFrame] = None,
-      rerank: Int = 100): DataFrame =
-    probeVectors(vectors, postings, chooseCentroids(centroids, query, params),
-        userIds, filterPoints, tombstones)
-      .withColumn("adc", Opq.adcDistance(model, col("opq_codes"), query))
-      .orderBy(col("adc").asc, col("doc_id").asc)
-      .limit(math.max(params.topK, rerank))
-      .withColumn("score", l2_distance(col("vector"), vec(query)))
-      .orderBy(scoreOrder: _*)
-      .limit(params.topK)
+      estimate: Option[Column] = None): DataFrame =
+    Quantizer.ranked(
+        probeVectors(vectors, postings, chooseCentroids(centroids, query, params),
+          userIds, filterPoints, tombstones),
+        estimate, l2_distance(col("vector"), vec(query)), "doc_id", "score",
+        params.topK, rerank = 100)
       .select("user_id", "doc_id", "score")
 
   /** Late-interaction (ColBERT-style MaxSim) retrieval over a
@@ -257,56 +213,6 @@ object Search {
       .orderBy(col("score").desc, col(docIdCol).asc)
       .limit(k)
   }
-
-  /** SPANN search over an SQ8-quantized segment: identical probe
-    * pipeline to [[spannAdc]], candidates ranked by the byte-code
-    * asymmetric L2 estimate, best `rerank` re-scored exactly. */
-  def spannSq8(
-      vectors: DataFrame, // must carry sq_codes
-      centroids: DataFrame,
-      postings: DataFrame,
-      model: ScalarQuantizer.Model,
-      query: Seq[Double],
-      params: SearchParams = SearchParams(),
-      userIds: Seq[Any] = Nil,
-      filterPoints: Option[DataFrame] = None,
-      tombstones: Option[DataFrame] = None,
-      rerank: Int = 100): DataFrame =
-    probeVectors(vectors, postings, chooseCentroids(centroids, query, params),
-        userIds, filterPoints, tombstones)
-      .withColumn("est", ScalarQuantizer.distanceCol(model, col("sq_codes"), query))
-      .orderBy(col("est").asc, col("doc_id").asc)
-      .limit(math.max(params.topK, rerank))
-      .withColumn("score", l2_distance(col("vector"), vec(query)))
-      .orderBy(scoreOrder: _*)
-      .limit(params.topK)
-      .select("user_id", "doc_id", "score")
-
-  /** SPANN search over a RaBitQ-quantized segment (K2 + V6): identical
-    * probe pipeline to [[spannAdc]], but candidates are ranked by the
-    * RaBitQ estimated distance over their 1-bit sign codes (one rotated
-    * query per search) and only the best `rerank` are re-scored exactly. */
-  def spannRabitq(
-      vectors: DataFrame, // must carry rq_code, rq_f, rq_norm
-      centroids: DataFrame,
-      postings: DataFrame,
-      model: RaBitQ.Model,
-      query: Seq[Double],
-      params: SearchParams = SearchParams(),
-      userIds: Seq[Any] = Nil,
-      filterPoints: Option[DataFrame] = None,
-      tombstones: Option[DataFrame] = None,
-      rerank: Int = 100): DataFrame =
-    probeVectors(vectors, postings, chooseCentroids(centroids, query, params),
-        userIds, filterPoints, tombstones)
-      .withColumn("est", RaBitQ.estDistance(
-        model, col("rq_code"), col("rq_f"), col("rq_norm"), query))
-      .orderBy(col("est").asc, col("doc_id").asc)
-      .limit(math.max(params.topK, rerank))
-      .withColumn("score", l2_distance(col("vector"), vec(query)))
-      .orderBy(scoreOrder: _*)
-      .limit(params.topK)
-      .select("user_id", "doc_id", "score")
 
   /** Scatter-gather merge (A6/D2, rs/aggregator/src/aggregator.rs:41-146):
     * union per-shard/per-collection result frames and take the global

@@ -318,52 +318,67 @@ class CollectionSpec extends SparkSuite {
     assert(got === Seq(4L, 2L)) // id-matched flushed docs only, no tail rows
   }
 
-  test("PQ-quantized collection: ADC + exact re-rank returns the golden neighbors") {
-    val base = tmpBase()
-    val coll = Collection.create(spark, base, config.copy(
-      name = "cpq", quantizer = "pq", pqSubvectors = 2, pqBits = 6))
-    coll.insert(lineRows(1000))
-    coll.flush()
-    // codebook persisted per segment, codes stored in the vectors table
-    assert(coll.readPqModel("seg_1").isDefined)
-    assert(spark.read.parquet(s"${coll.path}/segments/seg_1/vectors")
-      .columns.contains("pq_codes"))
-    val got = coll.snapshot().search(Seq(2.4, 3.4, 4.4, 5.4),
-      SearchParams(topK = 2, numExploredCentroids = Some(10)))
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(got === Seq(4L, 3L)) // exact re-rank recovers the golden answer
+  test("quantized collection of every kind returns the golden neighbors") {
+    // one row per quantizer kind: its config and a code column its
+    // vectors table must carry
+    for ((kind, kindConfig, codeCol) <- Seq(
+        ("pq", config.copy(name = "cpq", quantizer = "pq", pqSubvectors = 2, pqBits = 6),
+          "pq_codes"),
+        ("opq", config.copy(name = "copq", quantizer = "opq", pqSubvectors = 2, pqBits = 6),
+          "opq_codes"),
+        ("sq8", config.copy(name = "csq", quantizer = "sq8"), "sq_codes"),
+        ("rabitq", config.copy(name = "crq", quantizer = "rabitq"), "rq_code"))) {
+      val base = tmpBase()
+      val coll = Collection.create(spark, base, kindConfig)
+      coll.insert(lineRows(1000))
+      coll.flush()
+      // model persisted per segment, codes stored in the vectors table
+      assert(coll.codec("seg_1").isDefined, kind)
+      assert(spark.read.parquet(s"${coll.path}/segments/seg_1/vectors")
+        .columns.contains(codeCol), kind)
+      def golden(c: Collection): Seq[Long] = c.snapshot().search(Seq(2.4, 3.4, 4.4, 5.4),
+          SearchParams(topK = 2, numExploredCentroids = Some(10)))
+        .select("doc_id").collect().map(_.getLong(0)).toSeq
+      assert(golden(coll) === Seq(4L, 3L), kind) // exact re-rank recovers the golden answer
+      // the persisted config reopens to the same codec and answer
+      val reopened = Collection.openPersisted(spark, base, kindConfig.name)
+      assert(reopened.codec("seg_1").isDefined, kind)
+      assert(golden(reopened) === Seq(4L, 3L), kind)
+      // a segment without its model file answers through plain SPANN
+      Files.delete(java.nio.file.Paths.get(coll.path, "segments", "seg_1",
+        graft.operators.Quantizer.codecs(kind).modelFile))
+      assert(coll.codec("seg_1").isEmpty, kind)
+      assert(golden(coll) === Seq(4L, 3L), kind)
+    }
   }
 
-  test("OPQ-quantized collection: rotated ADC + exact re-rank returns the golden neighbors") {
-    val base = tmpBase()
-    val coll = Collection.create(spark, base, config.copy(
-      name = "copq", quantizer = "opq", pqSubvectors = 2, pqBits = 6))
-    coll.insert(lineRows(1000))
-    coll.flush()
-    // rotation + codebooks persisted per segment, codes in the vectors table
-    assert(coll.readOpqModel("seg_1").isDefined)
-    assert(spark.read.parquet(s"${coll.path}/segments/seg_1/vectors")
-      .columns.contains("opq_codes"))
-    val got = coll.snapshot().search(Seq(2.4, 3.4, 4.4, 5.4),
-      SearchParams(topK = 2, numExploredCentroids = Some(10)))
+  test("null keyword value: NotContains keeps it, BM25 agrees on every path") {
+    val kwConfig = config.copy(name = "ckw",
+      attributeSchema = config.attributeSchema :+ AttrField("kind", "keyword", "none"))
+    val coll = Collection.create(spark, tmpBase(), kwConfig)
+    coll.insert(Seq(
+      (0L, 1L, Seq(1.0, 1.0, 1.0, 1.0), "first", Option("note")),
+      (0L, 2L, Seq(2.0, 2.0, 2.0, 2.0), "second", Option("task")),
+      (0L, 3L, Seq(3.0, 3.0, 3.0, 3.0), "third", None),
+      (0L, 4L, Seq(4.0, 4.0, 4.0, 4.0), "fourth", Option("note")))
+      .toDF("user_id", "doc_id", "vector", "content", "kind"))
+    def notNote(): Seq[Long] = coll.snapshot()
+      .termSearch(DocFilter.NotContains("kind", "note", keyword = true), 10)
       .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(got === Seq(4L, 3L)) // exact re-rank recovers the golden answer
-  }
-
-  test("SQ8-quantized collection: byte-code estimate + exact re-rank returns the golden neighbors") {
-    val base = tmpBase()
-    val coll = Collection.create(spark, base, config.copy(
-      name = "csq", quantizer = "sq8"))
-    coll.insert(lineRows(1000))
+    def ranked(): Seq[(Long, Double)] = coll.snapshot().rankedSearch("kind", "note", 10)
+      .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    def servedRanked(): Seq[(Long, Double)] = coll.serveUser(0L).rankedSearch("kind", "note", 10)
+      .map { case (id, sc, _) => (id.asInstanceOf[Long], sc) }
+    // the null-kind doc 3 has no "note" token, so NotContains keeps it
+    assert(notNote() === Seq(2L, 3L), "tail NotContains")
+    val tailRanked = ranked()
+    assert(tailRanked.map(_._1) === Seq(1L, 4L))
+    assert(servedRanked() === tailRanked, "served == Spark BM25 over the tail")
     coll.flush()
-    // per-segment range model persisted, codes stored in the vectors table
-    assert(coll.readSqModel("seg_1").isDefined)
-    assert(spark.read.parquet(s"${coll.path}/segments/seg_1/vectors")
-      .columns.contains("sq_codes"))
-    val got = coll.snapshot().search(Seq(2.4, 3.4, 4.4, 5.4),
-      SearchParams(topK = 2, numExploredCentroids = Some(10)))
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(got === Seq(4L, 3L)) // exact re-rank recovers the golden answer
+    assert(notNote() === Seq(2L, 3L), "flushed NotContains")
+    // dl 0 for the null value on every path: the scores survive the flush
+    assert(ranked() === tailRanked, "Spark BM25 before == after flush")
+    assert(servedRanked() === tailRanked, "served == Spark BM25 over the segment")
   }
 
   test("CONFIG: truncated file fails loudly; legacy headerless file opens via defaults") {

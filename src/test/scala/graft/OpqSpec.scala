@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Ann, Opq, ProductQuantizer}
+import graft.operators.{Ann, Opq, ProductQuantizer, Quantizer}
 
 /** Optimized Product Quantization (Ge et al., CVPR'13): the learned
   * rotation is orthogonal (distance-preserving), training never does worse
@@ -88,7 +88,8 @@ class OpqSpec extends SparkSuite {
       .select("adc", "exact").collect()
     val mre = adc.map(r => math.abs(r.getDouble(0) - r.getDouble(1)) / (r.getDouble(1) + 1e-9))
     assert(mre.sum / mre.length < 0.2, "mean relative ADC error too high")
-    val got = Opq.topK(encoded, model, query, k = 10, rerank = 100)
+    val got = Quantizer.rerankTopK(encoded, Quantizer.OpqCodec.estimate(model, query), query,
+      k = 10, rerank = 100)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val oracle = Ann.bruteForceTopK(emb, query, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq

@@ -78,9 +78,14 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("SQ8 search ranks on the codegen estimator inside a bounded top-k") {
-    val p = plan("q81_sq8_ann")
-    assert(p.contains("sq8_l2_distance"), s"q81 lost the codegen estimator:\n$p")
-    assert(p.contains("TakeOrderedAndProject"), s"q81 lost the bounded rank:\n$p")
+    // and so does every other quantized flat search (Quantizer.rerankTopK)
+    for ((q, kernel) <- Seq("q81_sq8_ann" -> "sq8_l2_distance",
+        "q35_pq_ann" -> "pq_adc_distance", "q41_rabitq_ann" -> "rabitq_signed_dot",
+        "q113_opq_ann" -> "pq_adc_distance")) {
+      val p = plan(q)
+      assert(p.contains(kernel), s"$q lost the codegen estimator:\n$p")
+      assert(p.contains("TakeOrderedAndProject"), s"$q lost the bounded rank:\n$p")
+    }
   }
 
   test("asof and range joins stay hash/window-shaped — never a nested loop") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Ann, ProductQuantizer}
+import graft.operators.{Ann, ProductQuantizer, Quantizer}
 
 /** Product quantization: encode/decode fidelity and ADC-ranked search
   * recall vs the exact oracle (SURVEY §2.8 V3/V4). */
@@ -50,7 +50,8 @@ class PqSpec extends SparkSuite {
     val query = (0 until 16).map(d => if (d % 8 == 5) 5.0 else 0.01)
     val encoded = emb.withColumn("pq_codes",
       ProductQuantizer.encodeCol(model, col("embedding")))
-    val got = ProductQuantizer.topK(encoded, model, query, k = 10, rerank = 64)
+    val got = Quantizer.rerankTopK(encoded, Quantizer.PqCodec.estimate(model, query), query,
+      k = 10, rerank = 64)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val oracle = Ann.bruteForceTopK(emb, query, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq

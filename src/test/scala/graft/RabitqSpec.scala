@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.core.{Collection, CollectionConfig}
-import graft.operators.{Ann, RaBitQ, SearchParams}
+import graft.operators.{Ann, Quantizer, RaBitQ}
 
 /** RaBitQ binary quantization (SURVEY §2.8 V6): rotation orthonormality,
-  * estimator quality, re-ranked search recall vs the exact oracle, and the
-  * collection-level quantizer="rabitq" path. */
+  * estimator quality and re-ranked search recall vs the exact oracle (the
+  * collection-level quantizer="rabitq" path is a row of CollectionSpec's
+  * quantized-collection table). */
 class RabitqSpec extends SparkSuite {
   import spark.implicits._
 
@@ -55,28 +55,12 @@ class RabitqSpec extends SparkSuite {
       .withColumn("rq", RaBitQ.encodeCols(model, col("embedding")))
       .select(col("vec_id"), col("embedding"),
         col("rq._1").as("rq_code"), col("rq._2").as("rq_f"), col("rq._3").as("rq_norm"))
-    val got = RaBitQ.topK(encoded, model, query, k = 10, rerank = 64)
+    val got = Quantizer.rerankTopK(encoded, Quantizer.RabitqCodec.estimate(model, query), query,
+      k = 10, rerank = 64)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val oracle = Ann.bruteForceTopK(emb, query, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val recall = got.toSet.intersect(oracle.toSet).size.toDouble / 10
     assert(recall >= 0.9, s"recall@10 $recall below 0.9; got=$got oracle=$oracle")
-  }
-
-  test("rabitq-quantized collection returns the golden neighbors") {
-    val base = java.nio.file.Files.createTempDirectory("graft_rq").toString
-    val coll = Collection.create(spark, base, CollectionConfig(
-      name = "crq", numFeatures = 4, initialNumCentroids = 10, quantizer = "rabitq"))
-    coll.insert((0 until 1000).map { i =>
-      (0L, i.toLong, Seq(i.toDouble, i.toDouble, i.toDouble, i.toDouble))
-    }.toDF("user_id", "doc_id", "vector"))
-    coll.flush()
-    assert(coll.readRabitqModel("seg_1").isDefined)
-    assert(spark.read.parquet(s"${coll.path}/segments/seg_1/vectors")
-      .columns.contains("rq_code"))
-    val got = coll.snapshot().search(Seq(2.4, 3.4, 4.4, 5.4),
-      SearchParams(topK = 2, numExploredCentroids = Some(10)))
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(got === Seq(4L, 3L)) // exact re-rank recovers the golden answer
   }
 }

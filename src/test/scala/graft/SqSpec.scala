@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Ann, ScalarQuantizer}
+import graft.operators.{Ann, Quantizer, ScalarQuantizer}
 
 /** SQ8 scalar quantization (q81): range fit, encode/decode error bound,
   * estimate quality, and search recall vs brute force. */
@@ -76,7 +76,7 @@ class SqSpec extends SparkSuite {
     // recall@10 vs brute force
     val oracle = Ann.bruteForceTopK(df, q, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val got = ScalarQuantizer.topK(encoded, m, q, k = 10, rerank = 100)
+    val got = Quantizer.rerankTopK(encoded, Quantizer.Sq8Codec.estimate(m, q), q, k = 10, rerank = 100)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(oracle.intersect(got).size >= 9, s"recall ${oracle.intersect(got).size}/10")
   }
