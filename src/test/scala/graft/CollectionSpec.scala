@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.{AttrField, Collection, CollectionConfig, Toc}
 import graft.operators.{DocFilter, SearchParams}
@@ -318,38 +319,21 @@ class CollectionSpec extends SparkSuite {
     assert(got === Seq(4L, 2L)) // id-matched flushed docs only, no tail rows
   }
 
-  test("quantized collection of every kind returns the golden neighbors") {
-    // one row per quantizer kind: its config and a code column its
-    // vectors table must carry
-    for ((kind, kindConfig, codeCol) <- Seq(
-        ("pq", config.copy(name = "cpq", quantizer = "pq", pqSubvectors = 2, pqBits = 6),
-          "pq_codes"),
-        ("opq", config.copy(name = "copq", quantizer = "opq", pqSubvectors = 2, pqBits = 6),
-          "opq_codes"),
-        ("sq8", config.copy(name = "csq", quantizer = "sq8"), "sq_codes"),
-        ("rabitq", config.copy(name = "crq", quantizer = "rabitq"), "rq_code"))) {
-      val base = tmpBase()
-      val coll = Collection.create(spark, base, kindConfig)
-      coll.insert(lineRows(1000))
-      coll.flush()
-      // model persisted per segment, codes stored in the vectors table
-      assert(coll.codec("seg_1").isDefined, kind)
-      assert(spark.read.parquet(s"${coll.path}/segments/seg_1/vectors")
-        .columns.contains(codeCol), kind)
-      def golden(c: Collection): Seq[Long] = c.snapshot().search(Seq(2.4, 3.4, 4.4, 5.4),
-          SearchParams(topK = 2, numExploredCentroids = Some(10)))
-        .select("doc_id").collect().map(_.getLong(0)).toSeq
-      assert(golden(coll) === Seq(4L, 3L), kind) // exact re-rank recovers the golden answer
-      // the persisted config reopens to the same codec and answer
-      val reopened = Collection.openPersisted(spark, base, kindConfig.name)
-      assert(reopened.codec("seg_1").isDefined, kind)
-      assert(golden(reopened) === Seq(4L, 3L), kind)
-      // a segment without its model file answers through plain SPANN
-      Files.delete(java.nio.file.Paths.get(coll.path, "segments", "seg_1",
-        graft.operators.Quantizer.codecs(kind).modelFile))
-      assert(coll.codec("seg_1").isEmpty, kind)
-      assert(golden(coll) === Seq(4L, 3L), kind)
-    }
+  test("PQ-quantized collection: ADC + exact re-rank returns the golden neighbors") {
+    CollectionSpec.assertQuantizedGolden(spark, tmpBase(),
+      config.copy(name = "cpq", quantizer = "pq", pqSubvectors = 2, pqBits = 6),
+      lineRows(1000), "pq_codes")
+  }
+
+  test("OPQ-quantized collection: rotated ADC + exact re-rank returns the golden neighbors") {
+    CollectionSpec.assertQuantizedGolden(spark, tmpBase(),
+      config.copy(name = "copq", quantizer = "opq", pqSubvectors = 2, pqBits = 6),
+      lineRows(1000), "opq_codes")
+  }
+
+  test("SQ8-quantized collection: byte-code estimate + exact re-rank returns the golden neighbors") {
+    CollectionSpec.assertQuantizedGolden(spark, tmpBase(),
+      config.copy(name = "csq", quantizer = "sq8"), lineRows(1000), "sq_codes")
   }
 
   test("null keyword value: NotContains keeps it, BM25 agrees on every path") {
@@ -801,5 +785,40 @@ class CollectionSpec extends SparkSuite {
     assert(legacy.snapshot().liveDocs.get.count() === 19L)
     assert(sparkIds(legacy) === Seq(3L, 5L, 2L, 6L))
     assert(servedIds(legacy) === Seq(3L, 5L, 2L, 6L))
+  }
+}
+
+object CollectionSpec {
+  import org.scalatest.Assertions._
+
+  /** Builds a `kindConfig` collection over `rows` (docs on the line
+    * i*(1,1,1,1)), flushes one segment and checks the quantizer seam: the
+    * segment carries its model and `codeCol`, the estimate + exact re-rank
+    * returns the golden neighbors, a reopened collection loads the same
+    * codec and answer, and without its model file the segment answers
+    * through plain SPANN. */
+  def assertQuantizedGolden(spark: SparkSession, base: String, kindConfig: CollectionConfig,
+      rows: DataFrame, codeCol: String): Unit = {
+    val kind = kindConfig.quantizer
+    val coll = Collection.create(spark, base, kindConfig)
+    coll.insert(rows)
+    coll.flush()
+    // model persisted per segment, codes stored in the vectors table
+    assert(coll.codec("seg_1").isDefined, kind)
+    assert(spark.read.parquet(s"${coll.path}/segments/seg_1/vectors")
+      .columns.contains(codeCol), kind)
+    def golden(c: Collection): Seq[Long] = c.snapshot().search(Seq(2.4, 3.4, 4.4, 5.4),
+        SearchParams(topK = 2, numExploredCentroids = Some(10)))
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+    assert(golden(coll) === Seq(4L, 3L), kind) // exact re-rank recovers the golden answer
+    // the persisted config reopens to the same codec and answer
+    val reopened = Collection.openPersisted(spark, base, kindConfig.name)
+    assert(reopened.codec("seg_1").isDefined, kind)
+    assert(golden(reopened) === Seq(4L, 3L), kind)
+    // a segment without its model file answers through plain SPANN
+    Files.delete(java.nio.file.Paths.get(coll.path, "segments", "seg_1",
+      graft.operators.Quantizer.codecs(kind).modelFile))
+    assert(coll.codec("seg_1").isEmpty, kind)
+    assert(golden(coll) === Seq(4L, 3L), kind)
   }
 }

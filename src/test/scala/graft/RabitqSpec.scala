@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.CollectionConfig
 import graft.operators.{Ann, Quantizer, RaBitQ}
 
 /** RaBitQ binary quantization (SURVEY §2.8 V6): rotation orthonormality,
-  * estimator quality and re-ranked search recall vs the exact oracle (the
-  * collection-level quantizer="rabitq" path is a row of CollectionSpec's
-  * quantized-collection table). */
+  * estimator quality, re-ranked search recall vs the exact oracle, and the
+  * collection-level quantizer="rabitq" path. */
 class RabitqSpec extends SparkSuite {
   import spark.implicits._
 
@@ -62,5 +62,15 @@ class RabitqSpec extends SparkSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val recall = got.toSet.intersect(oracle.toSet).size.toDouble / 10
     assert(recall >= 0.9, s"recall@10 $recall below 0.9; got=$got oracle=$oracle")
+  }
+
+  test("rabitq-quantized collection returns the golden neighbors") {
+    val base = java.nio.file.Files.createTempDirectory("graft_rq").toString
+    val rows = (0 until 1000).map { i =>
+      (0L, i.toLong, Seq(i.toDouble, i.toDouble, i.toDouble, i.toDouble))
+    }.toDF("user_id", "doc_id", "vector")
+    CollectionSpec.assertQuantizedGolden(spark, base, CollectionConfig(
+      name = "crq", numFeatures = 4, initialNumCentroids = 10, quantizer = "rabitq"),
+      rows, "rq_code")
   }
 }
