@@ -1,9 +1,10 @@
 package graft.api
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, StringType, StructField, StructType}
 
 import graft.core.{Collection, CollectionConfig, Ids}
 import graft.functions.PackKernels
@@ -87,21 +88,22 @@ class GraftService(spark: SparkSession, val basePath: String) {
     val users =
       if (req.userIds.length == 1) Seq.fill(req.docIds.length)(req.userIds.head)
       else req.userIds
-    val rows = req.docIds.indices.map { i =>
-      (i.toLong, toBytes(users(i)), toBytes(req.docIds(i)),
-        req.vectors.slice(i * d, (i + 1) * d).map(_.toDouble))
-    }
-    var df = rows.toDF("row_idx", "user_id", "doc_id", "vector")
-    req.attributes.foreach { case (field, values) =>
+    val attrs = req.attributes.toSeq
+    attrs.foreach { case (field, values) =>
       require(values.length == req.docIds.length, s"attr $field length mismatch")
-      // joined on the request row POSITION, not doc_id: doc ids are only
-      // unique per user, so the same doc id under two users must not
-      // cross-multiply attribute rows
-      val attrDf = req.docIds.indices.map(i => (i.toLong, values(i)))
-        .toDF("row_idx", field)
-      df = df.join(attrDf, Seq("row_idx"))
     }
-    coll.insert(df.drop("row_idx"))
+    // one LocalRelation: the rows stay on the driver, so the collection
+    // writes the batch without a Spark job
+    val schema = StructType(Seq(
+      StructField("user_id", BinaryType),
+      StructField("doc_id", BinaryType),
+      StructField("vector", ArrayType(DoubleType, containsNull = false))) ++
+      attrs.map { case (field, _) => StructField(field, StringType) })
+    val rows = req.docIds.indices.map { i =>
+      Row.fromSeq(Seq(toBytes(users(i)), toBytes(req.docIds(i)),
+        req.vectors.slice(i * d, (i + 1) * d).map(_.toDouble)) ++ attrs.map(_._2(i)))
+    }
+    coll.insert(spark.createDataFrame(rows.asJava, schema))
     req.docIds.length.toLong
   }
 
@@ -114,13 +116,20 @@ class GraftService(spark: SparkSession, val basePath: String) {
     * over ALL doc ids (rs/index_server/src/index_server.rs:454-510), and
     * this matches insert's 1-user-to-N-docs broadcast convention. */
   def remove(collectionName: String, userIds: Seq[String], docIds: Seq[String]): Unit = {
-    // The user x doc cross product is built as a crossJoin of two small
-    // frames, not a driver-side Seq — a 10k x 10k request stays 20k rows
-    // on the driver instead of 100M tuples. Duplicate ids are dropped
-    // up front (Collection.delete also dedups the written tombstones).
-    val u = userIds.distinct.map(toBytes).toDF("user_id")
-    val d = docIds.distinct.map(toBytes).toDF("doc_id")
-    collection(collectionName).delete(u.crossJoin(d))
+    // With at most one id on either side the user x doc product is no
+    // larger than the request: built on the driver as one LocalRelation,
+    // it deletes without a Spark writer job. Otherwise it is a crossJoin
+    // of two small frames, so a 10k x 10k request stays 20k rows on the
+    // driver instead of 100M tuples. Duplicate ids are dropped up front
+    // (Collection.delete also dedups the written tombstones).
+    val u = userIds.distinct.map(toBytes)
+    val d = docIds.distinct.map(toBytes)
+    val pairs =
+      if (math.min(u.size, d.size) <= 1)
+        spark.createDataFrame(u.flatMap(a => d.map(b => Row(a, b))).asJava,
+          StructType(Seq(StructField("user_id", BinaryType), StructField("doc_id", BinaryType))))
+      else u.toDF("user_id").crossJoin(d.toDF("doc_id"))
+    collection(collectionName).delete(pairs)
   }
 
   def flush(collectionName: String): Option[String] =

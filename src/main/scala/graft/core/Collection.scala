@@ -5,8 +5,12 @@ import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, XxHash64}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.functions.GraftFunctions._
 import graft.operators.{Ann, DocFilter, IvfBuilder, Quantizer, Search, SearchParams}
@@ -261,15 +265,22 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
   /** Append one insert batch: rows `[user_id: long, doc_id: long,
     * vector: array<double>, <attr columns...>]`. Returns the batch id.
     *
-    * Single-writer per collection, like the reference's WAL group leader
-    * (core.rs:41-90): concurrent writers race on batch-id allocation.
-    * Streaming ingest ([[graft.streaming.StreamingIngest]]) serializes
-    * writes through its micro-batch loop, which is the supported
-    * multi-producer path. */
+    * The batch is built in full in a hidden staging dir, then claims its
+    * WAL position with one atomic rename to `batch=<pos>` ([[claim]]), so
+    * it appears complete or not at all, and concurrent inserts and
+    * deletes never share a position. A request-sized frame (its optimized
+    * plan is a `LocalRelation`: the rows already sit on the driver) is
+    * written by [[WalPart]] with no Spark job; any other frame goes
+    * through the Spark writer. */
   def insert(rows: DataFrame): Long = {
-    val next = nextBatchId()
-    insertAt(next, rows)
-    next
+    val staged = stagingDir()
+    try {
+      localRows(rows) match {
+        case Some((schema, data)) => parts.write(schema, data, staged)
+        case None => rows.write.mode("overwrite").parquet(staged.toString)
+      }
+      claim(staged)
+    } catch { case e: Throwable => deleteTree(staged); throw e }
   }
 
   /** Write one ops batch at a caller-chosen id (overwrite). Streaming
@@ -282,6 +293,48 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     * never a manually inserted batch. */
   def insertAt(batchId: Long, rows: DataFrame): Unit =
     rows.write.mode("overwrite").parquet(batchDir(batchId))
+
+  /** The rows of a frame whose optimized plan is a `LocalRelation`, with
+    * that relation's schema; None for any frame that needs a Spark job. */
+  private def localRows(df: DataFrame): Option[(StructType, Seq[InternalRow])] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some((l.schema, l.data))
+      case _ => None
+    }
+
+  private lazy val parts = new WalPart(spark)
+
+  /** A new hidden staging dir under `ops/`. Its name never starts with
+    * `batch=`, so the tail, flush, the WAL clock and [[stateFingerprint]]
+    * never list it, and Spark's file listing skips its dot prefix; a
+    * writer that dies before its [[claim]] leaves it invisible. */
+  private[graft] def stagingDir(opsDir: java.nio.file.Path = Paths.get(opsPath)): java.nio.file.Path =
+    Files.createDirectories(opsDir.resolve(s".staging-${java.util.UUID.randomUUID()}"))
+
+  /** A staged delete position marker: `_TOMB`, plus `_TOMB_DONE` when no
+    * tombstone rows will follow (a backup clone's position pin). */
+  private def stagedMarker(opsDir: java.nio.file.Path, done: Boolean): java.nio.file.Path = {
+    val d = stagingDir(opsDir)
+    Files.writeString(d.resolve("_TOMB"), "")
+    if (done) Files.writeString(d.resolve("_TOMB_DONE"), "")
+    d
+  }
+
+  /** Claim the next even WAL position for a fully built staging dir with
+    * one atomic directory rename to `batch=<pos>`; when that name exists
+    * (a concurrent insert or delete claimed it), re-read the clock and
+    * retry on the next even id. rename(2) silently replaces an EMPTY
+    * directory, so no writer may ever create an empty `batch=` dir: every
+    * batch and marker is built in staging first. */
+  private def claim(staged: java.nio.file.Path): Long = {
+    var pos = nextBatchId()
+    while (!renamed(staged, Paths.get(batchDir(pos)))) pos = nextBatchId()
+    pos
+  }
+
+  private def renamed(from: java.nio.file.Path, to: java.nio.file.Path): Boolean =
+    try { Files.move(from, to, StandardCopyOption.ATOMIC_MOVE); true }
+    catch { case _: java.io.IOException if Files.exists(to) => false }
 
   /** All ops batch ids still on disk (ascending; history retained until
     * [[expireVersions]] truncates below every kept version's watermark). */
@@ -333,26 +386,66 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     * (F9, rs/index/src/segment/mod.rs:34-37) only drops pairs that no
     * LIVE data may contain: a pair passes if any segment bloom may hold
     * its doc_id OR it matches the unflushed ops tail exactly — dropping a
-    * tail-only delete would resurrect the doc at the next flush. */
-  def delete(pairs: DataFrame): Unit = {
+    * tail-only delete would resurrect the doc at the next flush.
+    *
+    * Request-sized pairs (a `LocalRelation`) are deduplicated and tested
+    * against the blooms on the driver; the pairs the blooms exclude are
+    * checked against the tail with one key-restricted collect (none when
+    * there is no tail or no such pair), and the tombstone part is written
+    * by [[WalPart]]. Other frames run the same rule as Spark jobs. Returns
+    * the claimed WAL position. */
+  def delete(pairs: DataFrame): Long = {
     val t = toc
-    val blooms = t.segments.flatMap(readBloom)
+    val blooms = t.segments.flatMap(segment(_).bloom)
     val base = pairs.select("user_id", "doc_id")
-    val filtered =
-      if (blooms.isEmpty) base // no segments: keep everything (tail-only state)
-      else {
-        val bc = spark.sparkContext.broadcast(blooms)
-        // blooms hold xxhash64(doc_id) — id-type agnostic (long or u128 binary)
-        val mayContain = udf { (h: Long) => bc.value.exists(_.mightContainLong(h)) }
-        val fromSegments = base.filter(mayContain(xxhash64(col("doc_id"))))
-        tail(t) match {
-          case None => fromSegments
-          case Some(rows) =>
-            val inTail = base.join(
-              rows.select("user_id", "doc_id"), Seq("user_id", "doc_id"), "left_semi")
-            fromSegments.union(inTail)
+    // blooms hold xxhash64(doc_id) — id-type agnostic (long or u128 binary)
+    def mayContain(h: Long) = blooms.exists(_.mightContainLong(h))
+    val write: Long => Unit = localRows(base) match {
+      case Some((schema, data)) =>
+        val Seq(uType, dType) = schema.map(_.dataType)
+        val hash = new XxHash64(Seq(BoundReference(1, dType, nullable = true)))
+        val byKey = data.map(r => (idKey(r.get(0, uType)), idKey(r.get(1, dType))) -> r).toMap
+        val excluded =
+          if (blooms.isEmpty) Map.empty[(Any, Any), InternalRow]
+          else byKey.filter { case (_, r) => !mayContain(hash.eval(r).asInstanceOf[Long]) }
+        val inTail: Set[(Any, Any)] = tail(t) match {
+          case Some(rows) if excluded.nonEmpty =>
+            rows.select("user_id", "doc_id")
+              .filter(col("doc_id").isin(excluded.values.map(_.get(1, dType)).toSeq: _*))
+              .collect().map(r => (idKey(r.get(0)), idKey(r.get(1)))).toSet
+          case _ => Set.empty
         }
-      }
+        val kept = byKey.filter { case (k, _) => !excluded.contains(k) || inTail(k) }.values
+        val tombSchema = schema.add("tomb_batch", LongType, nullable = false)
+        pos => if (kept.nonEmpty) {
+          val staged = stagingDir()
+          try {
+            val part = parts.write(tombSchema,
+              kept.map(r => InternalRow(r.get(0, uType), r.get(1, dType), pos)), staged)
+            Files.createDirectories(Paths.get(tombPath))
+            Files.move(part, Paths.get(tombPath, part.getFileName.toString),
+              StandardCopyOption.ATOMIC_MOVE)
+          } finally deleteTree(staged)
+        }
+      case None =>
+        val filtered =
+          if (blooms.isEmpty) base // no segments: keep everything (tail-only state)
+          else {
+            val bc = spark.sparkContext.broadcast(blooms)
+            val fromSegments = base.filter(udf { (h: Long) => bc.value.exists(_.mightContainLong(h)) }
+              .apply(xxhash64(col("doc_id"))))
+            tail(t) match {
+              case None => fromSegments
+              case Some(rows) =>
+                val inTail = base.join(
+                  rows.select("user_id", "doc_id"), Seq("user_id", "doc_id"), "left_semi")
+                fromSegments.union(inTail)
+            }
+          }
+        pos => filtered.dropDuplicates("user_id", "doc_id")
+          .withColumn("tomb_batch", lit(pos))
+          .write.mode("append").parquet(tombPath)
+    }
     // The delete claims a WAL position of its OWN — a marker batch dir in
     // the (even, batch-side) id space, holding no rows. tomb_batch = that
     // position: rows inserted in EARLIER batches are hidden, rows inserted
@@ -364,19 +457,24 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     // version's position, so snapshotAt leaked it into pinned history and
     // changes() dropped it from the delta (caught by ScaleCdc). Dedup is
     // unconditional so duplicate ids in a request add no tombstone rows.
-    val pos = nextBatchId()
-    val markerDir = Paths.get(batchDir(pos))
-    Files.createDirectories(markerDir)
-    Files.writeString(markerDir.resolve("_TOMB"), "")
-    filtered.dropDuplicates("user_id", "doc_id")
-      .withColumn("tomb_batch", lit(pos))
-      .write.mode("append").parquet(tombPath)
+    // The marker is staged with its `_TOMB` and claimed by rename, like an
+    // insert batch.
+    val pos = claim(stagedMarker(Paths.get(opsPath), done = false))
+    write(pos)
     // completion marker (round 17): the rows above are VISIBLE once this
     // file exists — [[recordTombInert]]'s measurement refuses to certify
     // while any at-or-below-bound delete is still between its position
     // claim and its parquet append (the claim-first order is what keeps
     // the WAL clock atomic, so in-flightness needs its own signal)
-    Files.writeString(markerDir.resolve("_TOMB_DONE"), "")
+    Files.writeString(Paths.get(batchDir(pos), "_TOMB_DONE"), "")
+    pos
+  }
+
+  /** An id value with content equality: binary (u128) ids compare by
+    * their bytes, like Spark's join keys. */
+  private def idKey(v: Any): Any = CatalystTypeConverters.convertToCatalyst(v) match {
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case x => x
   }
 
   /** The configured quantizer's codec; None for "noq". */
@@ -397,24 +495,17 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       }
     }
 
-  private def readBloom(seg: String): Option[org.apache.spark.util.sketch.BloomFilter] = {
-    val p = Paths.get(segPath(seg), "bloom.bin")
-    if (!Files.exists(p)) None
-    else {
-      val in = Files.newInputStream(p)
-      try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
-      finally in.close()
-    }
-  }
-
   /** One `spark.read.parquet` relation per WAL directory — the tombstone
     * table and each `ops/batch=<b>` — reused while the directory's listing
     * (file names and sizes) is unchanged, replaced when it changes: a
     * delete appends new part files, and a streaming epoch retry overwrites
-    * its batch with new ones. A fresh relation infers its schema with a
-    * Spark job; a reused one costs only its scan. None when the directory
-    * holds no parquet part: absent, or a delete's position-claim marker
-    * (`_TOMB` only), which readers must skip. */
+    * its batch with new ones. A fresh relation takes its schema from the
+    * parts' footers, read on the driver ([[partSchema]]), so it runs no
+    * schema-inference job; it falls back to inference when a footer lacks
+    * the Spark schema or the parts disagree. A reused relation costs only
+    * its scan. None when the directory holds no parquet part: absent, or
+    * a delete's position-claim marker (`_TOMB` only), which readers must
+    * skip. */
   private val walRelations = TrieMap.empty[String, (Seq[(String, Long)], DataFrame)]
   private def walRelation(dir: String): Option[DataFrame] = {
     val d = Paths.get(dir)
@@ -426,11 +517,25 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     else walRelations.get(dir) match {
       case Some((seen, df)) if seen == listing => Some(df)
       case _ =>
-        val df = spark.read.parquet(dir)
+        val schemas = listing.collect {
+          case (n, size) if n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_") =>
+            partSchema(d.resolve(n), size)
+        }.distinct
+        val reader = schemas match {
+          case Seq(Some(s)) => spark.read.schema(s)
+          case _ => spark.read
+        }
+        val df = reader.parquet(dir)
         walRelations.put(dir, (listing, df))
         Some(df)
     }
   }
+
+  /** A WAL part's Spark schema from its footer, cached by (file name,
+    * size): a part is immutable once it is renamed into its directory. */
+  private val partSchemas = TrieMap.empty[(String, Long), Option[StructType]]
+  private def partSchema(file: java.nio.file.Path, size: Long): Option[StructType] =
+    partSchemas.getOrElseUpdate((file.getFileName.toString, size), WalPart.footerSchema(file))
 
   /** Tombstones normalized to carry a `tomb_batch` watermark (legacy files
     * without one hide all batches — the old unsequenced semantics). */
@@ -512,7 +617,7 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     if (others.isEmpty) return
     val newKeys = segment(seg).vectors.select(col("user_id"), col("doc_id"))
     val disjoint = others.filter { other =>
-      val candidates = readBloom(other) match {
+      val candidates = segment(other).bloom match {
         case Some(bf) =>
           val bc = spark.sparkContext.broadcast(bf)
           val mayContain = udf { (h: Long) => bc.value.mightContainLong(h) }
@@ -628,6 +733,9 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       .observe(rowCountObs, count(lit(1)).as("n"))
       .write.mode("overwrite")
       .option("parquet.bloom.filter.enabled#doc_id", "true")
+      // sized to the data: without an NDV parquet-mr allocates its 1 MiB
+      // maximum per file, most of a small segment's bytes
+      .option("parquet.bloom.filter.adaptive.enabled", "true")
     (if (config.userBuckets > 0) w0.partitionBy("user_bucket") else w0)
       .parquet(s"${segPath(seg)}/vectors")
     val segRows = rowCountObs.get.apply("n").asInstanceOf[Long]
@@ -1036,7 +1144,9 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       Fs.listPaths(opsRoot).foreach { p =>
         val n = p.getFileName.toString
         if (n.startsWith("batch=") && n.stripPrefix("batch=").toLong <= minFlushed) {
-          walRelations.remove(s"$opsPath/$n")
+          walRelations.remove(s"$opsPath/$n").foreach { case (listing, _) =>
+            listing.foreach(partSchemas.remove)
+          }
           deleteTree(p)
         }
       }
@@ -1098,15 +1208,13 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
       // watermark and silently never flush. A rowless position-claim
       // marker at `pos` (the delete-marker convention — readers skip it)
       // makes the clone's next batch id pos+1.
-      if (pos >= 0 && !Files.exists(dest.resolve("ops").resolve(s"batch=$pos"))) {
-        val marker = dest.resolve("ops").resolve(s"batch=$pos")
-        Files.createDirectories(marker)
-        Files.writeString(marker.resolve("_TOMB"), "")
-        // vacuously complete: no tombstone rows will ever arrive for a
-        // clone's position pin — without this the clone could never
-        // certify tombstone inertness (recordTombInert's pending check)
-        Files.writeString(marker.resolve("_TOMB_DONE"), "")
-      }
+      // It is vacuously complete (`_TOMB_DONE`): no tombstone rows will
+      // ever arrive for it — without that the clone could never certify
+      // tombstone inertness (recordTombInert's pending check).
+      val marker = dest.resolve("ops").resolve(s"batch=$pos")
+      if (pos >= 0 && !Files.exists(marker))
+        Files.move(stagedMarker(dest.resolve("ops"), done = true), marker,
+          StandardCopyOption.ATOMIC_MOVE)
       tombstones.foreach { tb =>
         val visible = tb.filter(
           col("tomb_batch") <= pos || col("tomb_batch") === Long.MaxValue)
@@ -1522,8 +1630,9 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     *    `term_bucket` dirs with a parallel-listing job; the cached relation
     *    carries both, so a read of a segment costs only its data scan;
     *  - the facts MEASURED when it was built: `meta.json` (row count,
-    *    unique keys), `disjoint.json` ([[recordDisjointness]]) and
-    *    `inert.json` ([[recordTombInert]]). An absent fact reads as its
+    *    unique keys), `disjoint.json` ([[recordDisjointness]]),
+    *    `inert.json` ([[recordTombInert]]) and the doc_id bloom
+    *    (`bloom.bin`). An absent fact reads as its
     *    conservative value, keeping readers on the newest-wins path;
     *  - the one legacy format default: `src_batch` on vectors tables
     *    written before the column existed.
@@ -1577,6 +1686,17 @@ final class Collection(val spark: SparkSession, val path: String, val config: Co
     /** Pre-lens segments derive identical lengths from the positions
       * column — a fallback, not an error: the data fully exists. */
     lazy val hasLens: Boolean = Files.exists(Paths.get(file("lens")))
+    /** The segment-level bloom over xxhash64(doc_id) (`bloom.bin`, F9):
+      * the delete short-circuit and the disjointness probe. */
+    lazy val bloom: Option[org.apache.spark.util.sketch.BloomFilter] = {
+      val p = Paths.get(file("bloom.bin"))
+      if (!Files.exists(p)) None
+      else {
+        val in = Files.newInputStream(p)
+        try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
+        finally in.close()
+      }
+    }
     /** Does the term index carry per-(term, point) positions (what
       * Phrase/Near and BM25's tf consume)? */
     def hasPositions: Boolean = terms.columns.contains("positions")

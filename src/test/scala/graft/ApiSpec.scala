@@ -192,4 +192,50 @@ class ApiSpec extends SparkSuite {
     assert(res.docIds === Seq(uuid(1)))
     assert(res.scores === Seq(0.0))
   }
+
+  private def memories(name: String, ids: Seq[Int]): InsertRequest =
+    InsertRequest(name, docIds = ids.map(i => uuid(100 + i)), userIds = Seq(uuid(0)),
+      vectors = ids.flatMap(i => Seq.fill(4)(i.toFloat)),
+      attributes = Map("content" -> ids.map(i => s"memory number $i"),
+        "kind" -> ids.map(i => if (i % 2 == 0) "note" else "task")))
+
+  private def walConfig(name: String) = CollectionConfig(
+    name = name, numFeatures = 4, initialNumCentroids = 2,
+    attributeSchema = Seq(AttrField("content", "text", "english"), AttrField("kind", "keyword")))
+
+  test("insert writes its WAL part from the driver: no Spark job, rows readable") {
+    val svc = new GraftService(spark, Files.createTempDirectory("graft_api8").toString)
+    svc.createCollection(walConfig("ins"))
+    svc.insert(memories("ins", 0 until 20)) // first write builds the writer conf
+    val (_, jobs) = jobsDuring(svc.insert(memories("ins", 20 until 40)))
+    assert(jobs === 0L, s"a 20-memory insert ran $jobs Spark jobs")
+    val q = Seq(25.2f, 25.2f, 25.2f, 25.2f)
+    val dist = svc.search(SearchRequest("ins", q, topK = 3, userIds = Seq(uuid(0))))
+    assert(dist.docIds === Seq(uuid(125), uuid(126), uuid(124)))
+    assert(svc.serveUser("ins", uuid(0)).search(q, topK = 3).docIds === dist.docIds)
+    assert(svc.termSearch("ins", DocFilter.Contains("kind", "task"), 40).size === 20)
+    svc.flush("ins")
+    assert(svc.search(SearchRequest("ins", q, topK = 3, userIds = Seq(uuid(0)),
+      numExploredCentroids = Some(2), centroidDistanceRatio = 1e9)).docIds === dist.docIds)
+  }
+
+  test("remove of one user x 2 docs, one flushed and one in the tail, runs at most one job") {
+    val svc = new GraftService(spark, Files.createTempDirectory("graft_api9").toString)
+    svc.createCollection(walConfig("rm2"))
+    svc.insert(memories("rm2", 0 until 10))
+    svc.flush("rm2")
+    svc.insert(memories("rm2", 10 until 12))
+    val (_, jobs) = jobsDuring(svc.remove("rm2", Seq(uuid(0)), Seq(uuid(103), uuid(111))))
+    assert(jobs <= 1L, s"a request-sized remove ran $jobs Spark jobs")
+    val all = svc.search(SearchRequest("rm2", Seq(0f, 0f, 0f, 0f), topK = 20,
+      userIds = Seq(uuid(0)), numExploredCentroids = Some(2), centroidDistanceRatio = 1e9))
+    val live = (0 until 12).filterNot(Set(3, 11)).map(i => uuid(100 + i)).toSet
+    assert(all.docIds.toSet === live)
+    assert(svc.serveUser("rm2", uuid(0)).search(Seq(0f, 0f, 0f, 0f), topK = 20, nprobe = 2)
+      .docIds.toSet === live)
+    svc.flush("rm2") // the tail-only delete must hold across the flush
+    assert(svc.search(SearchRequest("rm2", Seq(0f, 0f, 0f, 0f), topK = 20,
+      userIds = Seq(uuid(0)), numExploredCentroids = Some(2), centroidDistanceRatio = 1e9))
+      .docIds.toSet === live)
+  }
 }

@@ -582,36 +582,6 @@ class CollectionSpec extends SparkSuite {
     assert(got === Seq(2L))
   }
 
-  /** Spark jobs `body` starts on this thread, counted by a listener on a
-    * thread-local tag (like Explain's Meter) once the async bus settles. */
-  private def jobsDuring[A](body: => A): (A, Long) = {
-    val tag = s"jobs-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty("graft.test.meter") == tag)
-          n.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    sc.setLocalProperty("graft.test.meter", tag)
-    try {
-      val a = body
-      var last = -1L
-      var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val c = n.get
-        stable = if (c == last) stable + 1 else 0
-        last = c
-      }
-      (a, n.get)
-    } finally {
-      sc.setLocalProperty("graft.test.meter", null)
-      sc.removeSparkListener(l)
-    }
-  }
-
   test("segment metadata costs no Spark job: plans build job-free, serveUser is bounded") {
     val base = tmpBase()
     val coll = Collection.create(spark, base, config)
@@ -785,6 +755,128 @@ class CollectionSpec extends SparkSuite {
     assert(legacy.snapshot().liveDocs.get.count() === 19L)
     assert(sparkIds(legacy) === Seq(3L, 5L, 2L, 6L))
     assert(servedIds(legacy) === Seq(3L, 5L, 2L, 6L))
+  }
+
+  test("driver-written WAL batch equals the Spark writer's: schema, rows, flushed segment, answers") {
+    val rows = lineRows(60)
+    val viaSpark = rows.coalesce(1) // same rows and order, not a LocalRelation
+    assert(!viaSpark.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val a = Collection.create(spark, tmpBase(), config)
+    val b = Collection.create(spark, tmpBase(), config)
+    a.insert(lineRows(1)) // the first write builds the writer's conf
+    val (posA, jobs) = jobsDuring(a.insert(rows))
+    assert(jobs === 0L, "a LocalRelation insert ran Spark jobs")
+    b.insert(lineRows(1))
+    val posB = b.insert(viaSpark)
+    assert(posA === posB)
+    val batchA = spark.read.parquet(s"${a.path}/ops/batch=$posA")
+    val batchB = spark.read.parquet(s"${b.path}/ops/batch=$posB")
+    assert(batchA.schema === batchB.schema)
+    assert(batchA.except(batchB).isEmpty && batchB.except(batchA).isEmpty)
+    val seg = a.flush().get
+    assert(b.flush().contains(seg))
+    for (t <- Seq("vectors", "terms", "centroids", "postings", "lens")) {
+      val (ta, tb) = (spark.read.parquet(a.segment(seg).file(t)), spark.read.parquet(b.segment(seg).file(t)))
+      assert(ta.schema === tb.schema, t)
+      assert(ta.except(tb).isEmpty && tb.except(ta).isEmpty, s"$t tables differ")
+    }
+    assert(sparkIds(a) === sparkIds(b))
+    assert(servedIds(a) === servedIds(b))
+    assert(a.snapshot().rankedSearch("content", "running", 5).collect().toSeq ===
+      b.snapshot().rankedSearch("content", "running", 5).collect().toSeq)
+  }
+
+  test("a new WAL batch or tombstone part costs no schema-inference job") {
+    val coll = Collection.create(spark, tmpBase(), config)
+    coll.insert(lineRows(20))
+    coll.flush()
+    coll.insert(lineRows(25).filter(col("doc_id") >= 20).repartition(2)) // Spark writer
+    val (_, insertJobs) = jobsDuring(coll.snapshot())
+    assert(insertJobs === 0L, "reading a new batch inferred its schema")
+    coll.delete(Seq((0L, 3L), (0L, 22L)).toDF("user_id", "doc_id"))
+    coll.delete(Seq((0L, 4L)).toDF("user_id", "doc_id").repartition(1)) // Spark writer
+    val (_, deleteJobs) = jobsDuring(coll.snapshot())
+    assert(deleteJobs === 0L, "reading new tombstone parts inferred their schema")
+    assert(coll.tombstones.get.schema === spark.read.parquet(s"${coll.path}/tombstones")
+      .withColumn("tomb_batch", coalesce(col("tomb_batch"), lit(Long.MaxValue))).schema)
+    assert(coll.snapshot().liveDocs.get.count() === 22L)
+  }
+
+  test("a leftover staging dir is invisible to the tail, flush, the WAL clock and stateFingerprint") {
+    val coll = Collection.create(spark, tmpBase(), config)
+    coll.insert(lineRows(10))
+    val fp = coll.stateFingerprint()
+    val next = coll.nextBatchId()
+    // writers that died after staging a batch and a delete marker, before
+    // claiming a position
+    lineRows(20).write.mode("overwrite").parquet(coll.stagingDir().toString)
+    Files.writeString(coll.stagingDir().resolve("_TOMB"), "")
+    assert(coll.stateFingerprint() === fp)
+    assert(coll.nextBatchId() === next)
+    assert(coll.snapshot().liveDocs.get.count() === 10L)
+    val seg = coll.flush().get
+    assert(coll.segment(seg).rows === Some(10L))
+    assert(coll.toc.lastFlushedBatch === next - 2)
+    assert(coll.nextBatchId() === next)
+    assert(coll.insert(lineRows(3)) === next)
+  }
+
+  test("concurrent inserts and deletes claim distinct WAL positions; nothing acked is lost or revived") {
+    // 4 writers, one user each: insert doc i, delete doc i - 2 after every
+    // third insert, re-insert doc 0 last. Within a writer the ops are
+    // sequential, so its newest-wins state is known; across writers the
+    // position claims race.
+    val coll = Collection.create(spark, tmpBase(), config.copy(name = "race", maxNumberOfSegments = 1))
+    val writers = 4
+    val claimed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def doc(u: Long, i: Long) = Seq((u, i, Seq.fill(4)(u * 100.0 + i), s"writer $u doc $i"))
+      .toDF("user_id", "doc_id", "vector", "content")
+    def round(first: Int, until: Int): Map[Long, Set[Long]] = {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(writers)
+      try (0L until writers.toLong).map { u =>
+        u -> pool.submit(new java.util.concurrent.Callable[(Set[Long], Set[Long])] {
+          def call(): (Set[Long], Set[Long]) = {
+            var (ins, del) = (Set.empty[Long], Set.empty[Long])
+            for (i <- first.toLong until until.toLong) {
+              claimed.add(coll.insert(doc(u, i))); ins += i
+              if (i % 3 == 2) {
+                claimed.add(coll.delete(Seq((u, i - 2)).toDF("user_id", "doc_id"))); del += i - 2
+              }
+            }
+            (ins, del)
+          }
+        })
+      }.map { case (u, f) => val (ins, del) = f.get(); u -> (ins -- del) }.toMap
+      finally pool.shutdown()
+    }
+    def liveOnSpark(): Map[Long, Set[Long]] = coll.snapshot().liveDocs.get
+      .select("user_id", "doc_id").collect().toSeq
+      .groupBy(_.getLong(0)).map { case (u, rs) => u -> rs.map(_.getLong(1)).toSet }
+    def liveServed(u: Long): Set[Long] =
+      coll.serveUser(u).search(Array.fill(4)(u * 100.0), k = 1000, nprobe = 1000)
+        .map(_._1.asInstanceOf[Long]).toSet
+
+    val first = round(0, 9)
+    coll.flush()
+    val second = round(9, 18)
+    val pending = claimed.size
+    (0L until writers.toLong).foreach(u => claimed.add(coll.insert(doc(u, 0))))
+    val expected = (0L until writers.toLong).map(u =>
+      u -> (first(u) ++ second(u) + 0L)).toMap
+    assert(claimed.size === pending + writers)
+    val positions = claimed.toArray.toSeq
+    assert(positions.distinct.size === positions.size,
+      s"writers shared WAL positions: ${positions.diff(positions.distinct)}")
+    assert(liveOnSpark() === expected)
+    (0L until writers.toLong).foreach(u => assert(liveServed(u) === expected(u), s"served user $u"))
+    coll.flush()
+    assert(coll.maybeCompact().exists(_.startsWith("merged")))
+    val merged = coll.toc.segments
+    assert(merged.size === 1 && coll.segment(merged.head).tombInertUpTo.isDefined,
+      "the merged segment should certify its tombstones inert (the fast path)")
+    assert(liveOnSpark() === expected)
+    (0L until writers.toLong).foreach(u => assert(liveServed(u) === expected(u), s"served user $u"))
   }
 }
 
